@@ -24,6 +24,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -227,6 +229,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     library callers that keep the session alive after collecting should
     ``unpersist()`` them (the bench harness clears all caches per
     query, so this only matters for long-lived embedding sessions)."""
+    pairs, deps = _minhash_pairs(spark, sf_dir)
+    result = pairs.orderBy("doc_a", "doc_b")
+    result._cached_deps = deps  # see docstring caching contract
+    return result
+
+
+def _minhash_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """:func:`dedup_minhash_lsh`'s verified pairs, unsorted, plus the
+    persisted intermediates (its caching contract) to release."""
     c = _corpus(spark, sf_dir)
     # repartition BEFORE the md5-heavy shingle map: the 3-way union
     # otherwise yields one partition per branch, serializing the
@@ -259,14 +270,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
         F.array_union("sh_a", "sh_b")
     )
-    result = (
+    pairs = (
         joined.select("doc_a", "doc_b", jac.alias("j"))
         .filter(F.col("j") >= 0.5)
         .select("doc_a", "doc_b", F.round("j", 9).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
     )
-    result._cached_deps = [shl, sigs]  # see docstring caching contract
-    return result
+    return pairs, [shl, sigs]
 
 
 # ---------------------------------------------------------------------------
@@ -517,9 +526,13 @@ def _d_minhash_pairs_cte() -> str:
     )"""
 
 
-@query(
-    "dedup_cluster_canonical",
-    oracle=f"""
+# Verified-pair count up to which connected components are labelled on
+# the driver: 2M pairs are 32 MB of int64 ids, so the whole graph makes
+# one Arrow round-trip instead of a shuffle per round. Larger graphs
+# take star contraction, which holds at any size.
+_DRIVER_CC_MAX_PAIRS = 2_000_000
+
+_D_CLUSTER_ORACLE = f"""
     WITH RECURSIVE
     {_d_minhash_pairs_cte()},
     edges AS (
@@ -536,137 +549,36 @@ def _d_minhash_pairs_cte() -> str:
            CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size,
            (doc_id = cluster_id) AS is_canonical
     FROM comp ORDER BY doc_id
-    """,
-)
-def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup pipeline's MISSING LAST STEP: near-dup pairs →
-    connected components → canonical-document election (keep min id
-    per cluster) — what a training-data pipeline actually deletes by.
+    """
 
-    Components via min-label propagation as a persist-per-round loop:
 
-    * Docs touching no edge are singleton clusters by construction —
-      they bypass propagation entirely (at real dedup rates that is
-      90%+ of the corpus excluded from every iteration shuffle).
-    * Duplicate clusters are near-cliques, so diameter is 1-2 and
-      min-label propagation converges in <=3 rounds; the loop probes
-      convergence each round (the probe count doubles as the cache
-      materialization) and stops at the fixpoint.
-    * MEASURED (sf0.1, local[32]): a 4-round plan unrolled into one
-      job costs ~6.8s vs ~0.9s/round for this loop — AQE creates each
-      shuffle query-stage serially with a driver round-trip either
-      way, and the deep chained plan pays growing re-optimization on
-      top, so unrolling buys nothing. Each round is one shuffle of
-      the edge list → the 1000x story is per-round shuffle volume,
-      unchanged; for adversarial chain graphs use the implemented
-      :func:`dedup_cluster_star` (same contract, O(log n) rounds).
+def _driver_components(a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    """Connected components of the undirected edges ``(a[i], b[i])``
+    by hook-and-shortcut over numpy arrays. Returns one row per
+    edge-touching node: ``doc_id``, ``cluster_id`` (the component's
+    min id) and ``cluster_size``.
 
-    Output: every corpus doc with its cluster id, cluster size, and
-    whether it is the cluster's canonical representative."""
-    lsh_result = dedup_minhash_lsh(spark, sf_dir)
-    # Capture the upstream caching contract BEFORE .select(): DataFrame
-    # transformations return new objects without the _cached_deps
-    # Python attribute, so reading it off `pairs` would always be [].
-    upstream_deps = getattr(lsh_result, "_cached_deps", [])
-    pairs = lsh_result.select("doc_a", "doc_b")
-    docs = _corpus(spark, sf_dir).select("doc_id")
-    # Symmetrize in ONE pass over the verified pairs: a union of pairs
-    # with its own swap would run the LSH candidate+verify join TWICE
-    # into the edge cache (measured ~2× the whole pipeline's cost).
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
-                    F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .persist()
-    )
-    cached = [edges]
-    # Materialize the edge cache BEFORE building the unrolled plan:
-    # it is referenced from 6 sibling stages below, and un-filled
-    # lazy caches would recompute the MinHash pipeline concurrently.
-    edges.count()
-
-    def step(labels: DataFrame) -> DataFrame:
-        """One min-label round; carries the previous label as `prev`
-        so convergence is checked from the same materialization."""
-        neigh = (
-            edges.join(labels.select(F.col("doc_id").alias("b"), "cluster_id"), "b")
-            .groupBy(F.col("a").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        return labels.join(neigh, "doc_id", "left").select(
-            "doc_id",
-            F.col("cluster_id").alias("prev"),
-            F.least(F.col("cluster_id"), F.coalesce("nmin", F.col("cluster_id"))).alias(
-                "cluster_id"
-            ),
-        )
-
-    # Only docs that appear in an edge participate in propagation.
-    connected = edges.select(F.col("a").alias("doc_id")).distinct()
-    labels = connected.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    changed = 1
-    # Same localCheckpoint-per-round as dedup_cluster_star (see the
-    # rationale there): persist alone nests each round's lineage into
-    # the next plan AND into every downstream consumer —
-    # dedup_sampling_weights was analyzing a ~3 MB plan string;
-    # checkpointing truncates it to the checkpointed leaves. The
-    # coalesce pins the per-round width to the edge set's instead of
-    # letting the join/groupBy re-widen micro-stages each round.
-    parts = max(edges.rdd.getNumPartitions(), 1)
-    for _round in range(24):  # converges in <=3 for duplicate graphs
-        if changed == 0:
+    Nodes are relabelled to indices into their sorted unique ids, so
+    the min index of a component is its min doc id. Parents only ever
+    point at smaller indices in the same component: each round hooks
+    both endpoints' parents to the smaller of the two, then
+    shortcuts (``lab = lab[lab]``) until every node points at a root.
+    A round that changes nothing leaves one root per component."""
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = idx[: len(a)], idx[len(a) :]
+    lab = np.arange(len(nodes))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, prev[u], prev[v])
+        np.minimum.at(lab, prev[v], prev[u])
+        nxt = lab[lab]
+        while not np.array_equal(nxt, lab):
+            lab, nxt = nxt, nxt[nxt]
+        if np.array_equal(lab, prev):
             break
-        new_labels = (
-            step(labels.select("doc_id", "cluster_id"))
-            .coalesce(parts)
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("prev") != F.col("cluster_id")).count()
-        if labels in cached:
-            # release_frame, not unpersist: localCheckpoint blocks live
-            # on the checkpointed RDD, outside the SQL cache manager
-            release_frame(labels)
-            cached.remove(labels)
-        labels = new_labels
-        cached.append(labels)
-    if changed != 0:
-        # Unconverged labels are WRONG cluster ids (a component with
-        # diameter > 24 — e.g. an adversarial chain graph); electing
-        # canonicals from them would silently corrupt downstream dedup.
-        raise RuntimeError(
-            f"label propagation unconverged after 24 rounds: {changed} "
-            "labels still changing (component diameter > 24) — use "
-            "dedup_cluster_star, which contracts any graph in O(log n) rounds"
-        )
-
-    w = Window.partitionBy("cluster_id")
-    clustered = labels.select(
-        "doc_id",
-        "cluster_id",
-        F.count("*").over(w).cast("bigint").alias("cluster_size"),
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
+    return pd.DataFrame(
+        {"doc_id": nodes, "cluster_id": nodes[lab], "cluster_size": np.bincount(lab)[lab]}
     )
-    # Singletons never enter the loop or the window shuffle: cluster
-    # of themselves, size 1, trivially canonical. A singleton's id
-    # can't collide with a connected component's id (component ids
-    # are mins over edge-touching docs), so the union is disjoint.
-    singletons = docs.join(connected, "doc_id", "left_anti").select(
-        "doc_id",
-        F.col("doc_id").alias("cluster_id"),
-        F.lit(1).cast("bigint").alias("cluster_size"),
-        F.lit(True).alias("is_canonical"),
-    )
-    result = clustered.unionByName(singletons).orderBy("doc_id")
-    # loop survivors are localCheckpoint()ed → hand out ReleaseHandles
-    # so the caller contract's dep.unpersist() actually frees blocks
-    result._cached_deps = [ReleaseHandle(c) for c in cached] + upstream_deps
-    return result
 
 
 # Large/small pairs composed per checkpoint+probe. 1 is the MEASURED
@@ -683,11 +595,10 @@ _STARS_PER_CHECKPOINT = 1
 def _star_components(edges: DataFrame, max_rounds: int = 50) -> tuple[DataFrame, list]:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — O(log n) rounds on ANY graph shape, vs min-label
-    propagation's O(diameter): this is the swap-in for adversarial
-    long-chain graphs that would trip dedup_cluster_canonical's round
-    cap. Per round: one groupBy-min + one join per star op, same
-    per-round shuffle volume as label propagation.
+    SoCC'14) — O(log n) rounds on ANY graph shape, with no driver
+    memory bound: the route :func:`_cluster` takes for graphs above
+    :data:`_DRIVER_CC_MAX_PAIRS`. Per round: one groupBy-min + one
+    join per star op.
 
     ``edges``: symmetric directed pairs (a, b) — both directions
     present, no self-loops. Returns ``(labels, cached)``: a
@@ -796,77 +707,105 @@ def _star_components(edges: DataFrame, max_rounds: int = 50) -> tuple[DataFrame,
     return leaves.unionByName(roots), cached
 
 
-@query(
-    "dedup_cluster_star",
-    oracle=f"""
-    WITH RECURSIVE
-    {_d_minhash_pairs_cte()},
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ),
-    reach AS (
-      SELECT doc_id AS src, doc_id AS node FROM corpus
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.node = e.a
-    ),
-    comp AS (SELECT src AS doc_id, MIN(node) AS cluster_id FROM reach GROUP BY src)
-    SELECT doc_id, cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size,
-           (doc_id = cluster_id) AS is_canonical
-    FROM comp ORDER BY doc_id
-    """,
-)
-def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_cluster_canonical's contract computed by large-star /
-    small-star contraction (:func:`_star_components`) instead of
-    min-label propagation — identical output (same oracle), different
-    convergence envelope: O(log n) rounds regardless of component
-    diameter, so adversarial chain graphs that would trip the
-    label-propagation round cap terminate here (pinned by the 60-node
-    chain in tests/test_plan_properties.py). On real dup graphs
-    (near-cliques) both converge in 2-3 rounds; propagation does one
-    shuffle/round vs contraction's two, hence propagation stays the
-    default and this is the documented escape hatch."""
-    lsh_result = dedup_minhash_lsh(spark, sf_dir)
-    upstream_deps = getattr(lsh_result, "_cached_deps", [])
-    pairs = lsh_result.select("doc_a", "doc_b")
-    docs = _corpus(spark, sf_dir).select("doc_id")
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
-                    F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
-                )
-            ).alias("e")
+def _cluster(spark: SparkSession, sf_dir: str, star: bool = False) -> DataFrame:
+    """Near-dup pairs → connected components → canonical election:
+    every corpus doc with its cluster id (the component's min doc id),
+    cluster size, and whether it is the cluster's canonical
+    representative.
+
+    Routes on the verified pair count, read by collecting at most
+    :data:`_DRIVER_CC_MAX_PAIRS` + 1 pairs unsorted through Arrow:
+
+    * at or under the cap, :func:`_driver_components` labels the graph
+      in numpy and the labels return through one
+      ``createDataFrame(pandas)`` (with Arrow on, as ``get_spark``
+      sets it, decoded JVM-side: no Python worker);
+    * above it, or with ``star=True``, the pairs are symmetrized into a
+      persisted edge set and contracted by :func:`_star_components`.
+
+    Docs touching no pair never enter either kernel: the corpus
+    left-joins the labels and unmatched docs are their own size-1
+    cluster. Caching contract: ``_cached_deps`` holds the MinHash
+    caches, plus the star route's edge cache and checkpointed loop
+    survivor as ReleaseHandles (their blocks live on the RDD, so plain
+    ``unpersist`` would not free them)."""
+    pairs, deps = _minhash_pairs(spark, sf_dir)
+    pairs = pairs.select("doc_a", "doc_b")
+    local = None if star else pairs.limit(_DRIVER_CC_MAX_PAIRS + 1).toPandas()
+    if local is not None and len(local) <= _DRIVER_CC_MAX_PAIRS:
+        # at most 2 rows per pair (4M at the cap): broadcast, so the
+        # corpus side of the join never shuffles
+        labels = F.broadcast(
+            spark.createDataFrame(
+                _driver_components(
+                    local["doc_a"].to_numpy("int64"), local["doc_b"].to_numpy("int64")
+                ),
+                "doc_id long, cluster_id long, cluster_size long",
+            )
         )
-        .select("e.a", "e.b")
-        .persist()
+    else:
+        # Symmetrize in ONE pass over the verified pairs: a union of
+        # pairs with its own swap would run the LSH candidate+verify
+        # join TWICE into the edge cache.
+        edges = (
+            pairs.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+                        F.struct(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")),
+                    )
+                ).alias("e")
+            )
+            .select("e.a", "e.b")
+            .persist()
+        )
+        edges.count()  # materialize before the loop fans out over it
+        stars, cached = _star_components(edges)
+        labels = stars.withColumn(
+            "cluster_size",
+            F.count("*").over(Window.partitionBy("cluster_id")).cast("bigint"),
+        )
+        deps = [edges] + [ReleaseHandle(c) for c in cached] + deps
+    cluster_id = F.coalesce("cluster_id", "doc_id")
+    result = (
+        _corpus(spark, sf_dir)
+        .select("doc_id")
+        .join(labels, "doc_id", "left")
+        .select(
+            "doc_id",
+            cluster_id.alias("cluster_id"),
+            F.coalesce("cluster_size", F.lit(1).cast("bigint")).alias("cluster_size"),
+            (F.col("doc_id") == cluster_id).alias("is_canonical"),
+        )
+        .orderBy("doc_id")
     )
-    edges.count()
-    labels, cached = _star_components(edges)
-    connected = edges.select(F.col("a").alias("doc_id")).distinct()
-    w = Window.partitionBy("cluster_id")
-    clustered = labels.select(
-        "doc_id",
-        "cluster_id",
-        F.count("*").over(w).cast("bigint").alias("cluster_size"),
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-    )
-    singletons = docs.join(connected, "doc_id", "left_anti").select(
-        "doc_id",
-        F.col("doc_id").alias("cluster_id"),
-        F.lit(1).cast("bigint").alias("cluster_size"),
-        F.lit(True).alias("is_canonical"),
-    )
-    result = clustered.unionByName(singletons).orderBy("doc_id")
-    # star-loop survivors are localCheckpoint()ed → ReleaseHandles (see
-    # dedup_cluster_canonical); edges is a plain persist
-    result._cached_deps = (
-        [edges] + [ReleaseHandle(c) for c in cached] + upstream_deps
-    )
+    result._cached_deps = deps
     return result
+
+
+@query("dedup_cluster_canonical", oracle=_D_CLUSTER_ORACLE)
+def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dedup pipeline's last step: near-dup pairs → connected
+    components → canonical-document election (keep min id per
+    cluster) — what a training-data pipeline actually deletes by.
+
+    :func:`_cluster` routed on the pair count: graphs up to
+    :data:`_DRIVER_CC_MAX_PAIRS` verified pairs are labelled on the
+    driver in one Arrow round-trip, larger ones by star contraction.
+    Below the cap per-round driver coordination would be the whole
+    cost of a distributed loop, so that route runs no per-round jobs."""
+    return _cluster(spark, sf_dir)
+
+
+@query("dedup_cluster_star", oracle=_D_CLUSTER_ORACLE)
+def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dedup_cluster_canonical's contract pinned to the above-cap
+    route, large-star / small-star contraction
+    (:func:`_star_components`): identical output (same oracle), so the
+    route that only large graphs take stays under the oracle gate at
+    test size. O(log n) rounds regardless of component diameter
+    (pinned by the 60-node chain in tests/test_plan_properties.py)."""
+    return _cluster(spark, sf_dir, star=True)
 
 
 # ---------------------------------------------------------------------------
@@ -930,11 +869,12 @@ def dedup_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic.
 
     Plan shape: the verified cluster assignment is reused from
-    :func:`dedup_cluster_canonical` (its persist-per-round loop is the
-    only iterative part); on top of it this adds one broadcast join to
-    the documents dim (planted copies resolve their source via
-    base_id = doc_id % 100000) and one source-cardinality hash agg —
-    map-side partial aggregation absorbs the corpus volume."""
+    :func:`dedup_cluster_canonical` (labelled on the driver in one
+    Arrow round-trip up to its pair cap, by star contraction above
+    it); on top of it this adds one broadcast join to the documents
+    dim (planted copies resolve their source via base_id = doc_id %
+    100000) and one source-cardinality hash agg — map-side partial
+    aggregation absorbs the corpus volume."""
     clusters = dedup_cluster_canonical(spark, sf_dir)
     deps = getattr(clusters, "_cached_deps", [])
     toks = _corpus(spark, sf_dir).select("doc_id", word_len(F.col("text")).alias("tok"))

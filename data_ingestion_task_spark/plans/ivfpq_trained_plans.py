@@ -201,12 +201,13 @@ def _trained_lifecycle(
     # conf is restored before any corpus-sized search stage runs.
     #
     # Materialize the sample BEFORE narrowing: the corpus-wide
-    # orderBy().limit() scan then runs at session width (it plans as a
-    # shuffle-free TakeOrderedAndProject today, but a future
-    # sort-fallback plan would otherwise run a corpus-sized exchange at
-    # ~1 partition), and tools/profile_trained.py — which materializes
-    # the sample before narrowing — mirrors the executed plan (ADVICE
-    # r12 #1).
+    # orderBy().limit() scan then runs at session width. At the pinned
+    # 1024-row cap it plans as a shuffle-free TakeOrderedAndProject,
+    # but a scaled cap above spark.sql.execution.topKSortFallbackThreshold
+    # (10k by default) already plans the sort-fallback exchange, which
+    # would otherwise run corpus-sized at ~1 partition. And
+    # tools/profile_trained.py — which materializes the sample before
+    # narrowing — mirrors the executed plan.
     smp.count()
     # NOTE: spark.conf.set mutates the SESSION — any query executing
     # concurrently on this SparkSession would plan its shuffles at the

@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _codegen_cache_entries() -> str:
+    """``SPARK_GRAFT_CODEGEN_CACHE`` (default 8192), checked to be a
+    positive int here rather than failing later inside session start."""
+    raw = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(f"SPARK_GRAFT_CODEGEN_CACHE must be a positive int, got {raw!r}")
+    return str(n)
+
+
 def get_spark(
     app_name: str = "data-ingestion-task-spark",
     master: str | None = None,
@@ -26,6 +39,7 @@ def get_spark(
     [8, 64] locally; on a real cluster this is instead sized to
     data volume / target partition size (~128 MB) and AQE coalesces.
     """
+    codegen_cache = _codegen_cache_entries()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if master is None:
         master = f"local[{cpus or '*'}]"
@@ -48,10 +62,9 @@ def get_spark(
         # long-lived session running many plans (a 100 TB pipeline's
         # driver as much as this bench) wants the cache to cover its
         # working set; entries are compiled classes, not data.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192"),
-        )
+        # Static conf: ignored when getOrCreate() attaches to a session
+        # that is already running in this JVM.
+        .config("spark.sql.codegen.cache.maxEntries", codegen_cache)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_ingestion_task_spark.functions.cache import release_frame
+from data_ingestion_task_spark.functions.cache import ReleaseHandle, release_frame
 
 
 def _n_persistent(spark) -> int:
@@ -41,17 +41,35 @@ def test_release_frame_handles_plain_persist_and_cold_frames(spark):
 
 
 def test_api_release_frees_cluster_checkpoints(spark, sf_dir):
-    """The caller contract end-to-end: dedup_cluster_canonical hands
-    its checkpointed loop survivor out via _cached_deps as a
-    ReleaseHandle, so api.release (plain dep.unpersist()) actually
-    returns persistent-RDD count to baseline."""
+    """The caller contract end-to-end on the default (driver) route:
+    dedup_cluster_canonical labels the graph on the driver, so its
+    _cached_deps are only the upstream MinHash caches, and api.release
+    (plain dep.unpersist()) returns persistent-RDD count to baseline."""
     from data_ingestion_task_spark import api
     from data_ingestion_task_spark.plans.dedup_plans import dedup_cluster_canonical
 
     base = _n_persistent(spark)
     res = dedup_cluster_canonical(spark, sf_dir)
     res.count()
-    assert _n_persistent(spark) > base  # loop survivor + lsh caches live
+    assert not any(isinstance(d, ReleaseHandle) for d in res._cached_deps)
+    assert _n_persistent(spark) > base  # lsh caches live
+    api.release(res)
+    assert _n_persistent(spark) == base
+
+
+def test_api_release_frees_star_route_checkpoints(spark, sf_dir, monkeypatch):
+    """Same contract on the star route (forced by a zero pair cap): the
+    checkpointed loop survivor is handed out as a ReleaseHandle, so
+    api.release frees its RDD blocks too."""
+    from data_ingestion_task_spark import api
+    from data_ingestion_task_spark.plans import dedup_plans
+
+    monkeypatch.setattr(dedup_plans, "_DRIVER_CC_MAX_PAIRS", 0)
+    base = _n_persistent(spark)
+    res = dedup_plans.dedup_cluster_canonical(spark, sf_dir)
+    res.count()
+    assert any(isinstance(d, ReleaseHandle) for d in res._cached_deps)
+    assert _n_persistent(spark) > base  # loop survivor + edge and lsh caches live
     api.release(res)
     assert _n_persistent(spark) == base
 

@@ -6,9 +6,13 @@ narrow stages stay shuffle-free."""
 
 from __future__ import annotations
 
+import collections
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_task_spark.functions.cache import ReleaseHandle
 from data_ingestion_task_spark.plans import registry
 
 
@@ -102,36 +106,93 @@ def test_contamination_broadcasts_benchmark_side(plans):
     assert "CartesianProduct" not in plan
 
 
-def test_star_components_converges_on_long_chain(spark):
-    """The case min-label propagation's 24-round cap CANNOT handle: a
-    60-node chain (diameter 59). Large-star/small-star contracts it in
-    O(log n) rounds (SCALE.md's escape hatch, dedup_cluster_star) and
-    labels every node with the component minimum."""
+def _driver_labels(pairs: list[tuple[int, int]]) -> dict[int, int]:
+    import numpy as np
+
+    from data_ingestion_task_spark.plans.dedup_plans import _driver_components
+
+    a = np.array([p[0] for p in pairs], dtype="int64")
+    b = np.array([p[1] for p in pairs], dtype="int64")
+    out = _driver_components(a, b)
+    sizes = collections.Counter(out["cluster_id"].tolist())
+    assert out["cluster_size"].tolist() == [sizes[c] for c in out["cluster_id"]]
+    return dict(zip(out["doc_id"].tolist(), out["cluster_id"].tolist()))
+
+
+def _star_labels(spark, pairs: list[tuple[int, int]]) -> dict[int, int]:
+    from data_ingestion_task_spark.functions.cache import release_frame
     from data_ingestion_task_spark.plans.dedup_plans import _star_components
 
-    n = 60
-    chain = [(i, i + 1) for i in range(n - 1)] + [(i + 1, i) for i in range(n - 1)]
-    # a second, disjoint chain offset by 1000 — labels must not bleed
-    chain += [(1000 + i, 1001 + i) for i in range(9)] + [
-        (1001 + i, 1000 + i) for i in range(9)
-    ]
-    edges = spark.createDataFrame(chain, "a long, b long")
-    labels, cached = _star_components(edges)
+    sym = sorted({(a, b) for a, b in pairs} | {(b, a) for a, b in pairs})
+    labels, cached = _star_components(spark.createDataFrame(sym, "a long, b long"))
     got = {r.doc_id: r.cluster_id for r in labels.collect()}
-    from data_ingestion_task_spark.functions.cache import release_frame
-
     for dep in cached:
         release_frame(dep)
-    assert got == {**{i: 0 for i in range(n)}, **{1000 + i: 1000 for i in range(10)}}
+    return got
 
 
-def test_star_cluster_query_matches_propagation_query(spark, sf_dir):
+def test_star_components_converges_on_long_chain(spark):
+    """A 60-node chain (diameter 59) — the shape that defeats any
+    per-round O(diameter) propagation. Large-star/small-star contracts
+    it in O(log n) rounds (SCALE.md's above-cap route, dedup_cluster_star)
+    and labels every node with the component minimum; the driver
+    kernel agrees."""
+    n = 60
+    chain = [(i, i + 1) for i in range(n - 1)]
+    # a second, disjoint chain offset by 1000 — labels must not bleed
+    chain += [(1000 + i, 1001 + i) for i in range(9)]
+    want = {**{i: 0 for i in range(n)}, **{1000 + i: 1000 for i in range(10)}}
+    assert _star_labels(spark, chain) == want
+    assert _driver_labels(chain) == want
+
+
+def _random_graph(seed: int) -> list[tuple[int, int]]:
+    """Disjoint random components (spanning tree plus extra edges,
+    shuffled ids), a star whose hub is not its min, and isolated
+    pairs — each family in its own id block."""
+    rng = random.Random(seed)
+    pairs = []
+    for blk in range(rng.randint(3, 6)):
+        nodes = rng.sample(range(blk * 100, blk * 100 + 100), rng.randint(2, 15))
+        pairs += [(nodes[i], nodes[rng.randrange(i)]) for i in range(1, len(nodes))]
+        pairs += [tuple(rng.sample(nodes, 2)) for _ in range(rng.randint(0, len(nodes)))]
+    hub = 1000 + rng.randint(5, 15)
+    pairs += [(hub, 1000 + i) for i in range(20) if 1000 + i != hub]
+    pairs += [(2000 + 2 * i, 2001 + 2 * i) for i in range(rng.randint(1, 5))]
+    return pairs
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_driver_kernel_matches_star_components(spark, seed):
+    pairs = _random_graph(seed)
+    assert _driver_labels(pairs) == _star_labels(spark, pairs)
+
+
+def test_star_cluster_query_matches_driver_query(spark, sf_dir):
     """dedup_cluster_star and dedup_cluster_canonical implement the
     same contract — identical output row-for-row on the same corpus."""
     qs = registry.queries_dict()
     a = sorted(map(tuple, qs["dedup_cluster_canonical"](spark, sf_dir).collect()))
     b = sorted(map(tuple, qs["dedup_cluster_star"](spark, sf_dir).collect()))
     assert a == b
+
+
+def test_cluster_route_forced_to_star_is_row_identical(spark, sf_dir, monkeypatch):
+    """A zero pair cap sends dedup_cluster_canonical down the star
+    route; its rows must equal the default (driver) route's."""
+    from data_ingestion_task_spark import api
+    from data_ingestion_task_spark.plans import dedup_plans
+
+    q = registry.queries_dict()["dedup_cluster_canonical"]
+    a = q(spark, sf_dir)
+    assert not any(isinstance(d, ReleaseHandle) for d in a._cached_deps)
+    driver_rows = list(map(tuple, a.collect()))
+    monkeypatch.setattr(dedup_plans, "_DRIVER_CC_MAX_PAIRS", 0)
+    b = q(spark, sf_dir)
+    assert any(isinstance(d, ReleaseHandle) for d in b._cached_deps)
+    assert list(map(tuple, b.collect())) == driver_rows
+    api.release(a)
+    api.release(b)
 
 
 def test_kmeans_broadcasts_codebook_no_cartesian(plans):
