@@ -111,7 +111,11 @@ def main() -> None:
 def _trend_vs_previous_round(times: dict[str, float], total: float, sf: float) -> dict:
     """Round-over-round deltas: diff against the latest driver-recorded
     BENCH_r{N}.json (same sf) so per-query regressions are visible in
-    the bench line itself, not only by hand-diffing artifacts."""
+    the bench line itself, not only by hand-diffing artifacts. Only
+    artifacts carrying a ``queries`` map count — plain, or under
+    ``parsed`` in a ``{"n","rc","cpus","sf","tail","parsed"}`` record. The
+    r01–r11 artifacts kept only a front-truncated stdout tail and are
+    skipped."""
     import glob
     import re
 
@@ -121,15 +125,7 @@ def _trend_vs_previous_round(times: dict[str, float], total: float, sf: float) -
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if m:  # ignore stray non-numbered artifacts
             numbered.append((int(m.group(1)), p))
-    candidates = [p for _, p in sorted(numbered)]
-    meta_keys = {
-        "value", "sf", "n_queries", "warmup_sec", "n", "rc", "cpus",
-        # vs_prev numeric fields (current format puts vs_prev BEFORE
-        # queries — these must never be scraped as query times)
-        "prev_total", "delta_total", "common_total", "common_prev_total",
-        "common_delta",
-    }
-    for path in reversed(candidates):
+    for _, path in sorted(numbered, reverse=True):
         try:
             with open(path) as f:
                 prev = json.load(f)
@@ -137,84 +133,46 @@ def _trend_vs_previous_round(times: dict[str, float], total: float, sf: float) -
             continue
         if prev.get("sf") != sf:
             continue
-        # The driver wraps the bench line: {"n","rc","cpus","sf","tail",
-        # "parsed"} where tail is the (possibly front-truncated) JSON
-        # text. Accept plain, parsed, or scrape name:time pairs from tail.
-        pq = None
-        for cand_obj in (prev, prev.get("parsed")):
-            if isinstance(cand_obj, dict) and isinstance(cand_obj.get("queries"), dict):
-                pq = cand_obj["queries"]
-                break
-        if pq is None and isinstance(prev.get("tail"), str):
-            # Scrape the primary queries map. Current format orders
-            # vs_prev BEFORE queries, so prefer everything after the
-            # "queries" marker; old-format artifacts (queries first,
-            # vs_prev last) fall back to cutting before vs_prev.
-            tail = prev["tail"]
-            if '"queries"' in tail:
-                tail = tail.split('"queries"', 1)[1]
-            else:
-                tail = tail.split('"vs_prev"')[0]
-            pairs = re.findall(r'"([a-zA-Z0-9_]+)":\s*([0-9.]+)', tail)
-            pq = {k: float(v) for k, v in pairs if k not in meta_keys}
-        if not pq:
+        rec = next(
+            (
+                o
+                for o in (prev, prev.get("parsed"))
+                if isinstance(o, dict) and isinstance(o.get("queries"), dict)
+            ),
+            None,
+        )
+        if rec is None:
             continue
-        # A tail-scraped artifact can carry only a fragment of the real
-        # queries map (the r2 artifact kept 1 of 84) — comparing against
-        # a fragment yields nonsense totals/regressions. Require real
-        # overlap; otherwise fall back to an older, fuller artifact.
-        if len(set(times) & set(pq)) < min(len(times), max(10, len(times) // 2)):
-            continue
-        # Explicit None checks: `or`-chaining would discard a recorded
-        # 0.0 and silently fall through to a (possibly fragmentary)
-        # recomputed sum.
-        prev_total = prev.get("value")
-        if prev_total is None and isinstance(prev.get("parsed"), dict):
-            prev_total = prev["parsed"].get("value")
+        pq = rec["queries"]
+        # Explicit None check: `or` would discard a recorded 0.0.
+        prev_total = rec.get("value")
         if prev_total is None:
             prev_total = round(sum(pq.values()), 3)
-        deltas = {
-            name: round(t - pq[name], 3) for name, t in times.items() if name in pq
-        }
         regressions = dict(
             sorted(
-                ((n, d) for n, d in deltas.items() if d >= 0.5),
+                (
+                    (n, round(t - pq[n], 3))
+                    for n, t in times.items()
+                    if n in pq and t - pq[n] >= 0.5
+                ),
                 key=lambda kv: -kv[1],
             )
         )
         common = set(times) & set(pq)
-        # A tail-scraped artifact may cover only part of the real query
-        # map (the driver's stdout capture truncates the front): then
-        # "absent from prev" does NOT mean "new this round", and
-        # prev_total covers a different set than the visible queries.
-        # Flag partial coverage and report a count instead of a
-        # misleading 60-name "new_queries" list (r8 cleanup).
-        prev_n = prev.get("n_queries")
-        if prev_n is None and isinstance(prev.get("tail"), str):
-            mnq = re.search(r'"n_queries":\s*(\d+)', prev["tail"])
-            prev_n = int(mnq.group(1)) if mnq else None
-        partial = prev_n is not None and len(pq) < prev_n
-        vs = {
-            "prev_round": os.path.basename(path),
-            "prev_total": prev_total,
-            "delta_total": round(total - prev_total, 3),
-            # the honest trend: same-query totals this round vs prev
-            # (raw delta_total conflates growth of the query set).
-            "common_total": round(sum(times[n] for n in common), 3),
-            "common_prev_total": round(sum(pq[n] for n in common), 3),
-            "common_delta": round(
-                sum(times[n] - pq[n] for n in common), 3
-            ),
-            "regressions_ge_500ms": regressions,
-            # full query_deltas dropped: reconstructable from the
-            # queries maps, and the bulk risked truncating them.
+        return {
+            "vs_prev": {
+                "prev_round": os.path.basename(path),
+                "prev_total": prev_total,
+                "delta_total": round(total - prev_total, 3),
+                # the honest trend: same-query totals this round vs prev
+                # (raw delta_total conflates growth of the query set).
+                "common_total": round(sum(times[n] for n in common), 3),
+                "common_prev_total": round(sum(pq[n] for n in common), 3),
+                "common_delta": round(sum(times[n] - pq[n] for n in common), 3),
+                "regressions_ge_500ms": regressions,
+                "new_queries": sorted(set(times) - set(pq)),
+            }
         }
-        if partial:
-            vs["prev_coverage"] = f"{len(pq)}/{prev_n} queries visible"
-            vs["not_in_prev_visible"] = len(set(times) - set(pq))
-        else:
-            vs["new_queries"] = sorted(set(times) - set(pq))
-        return {"vs_prev": vs}
     return {}
 
 

@@ -60,6 +60,18 @@ def _d_hash64(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
+# MinHash signatures over ``sh(doc_id, h)`` (one row per hashed
+# shingle) and their band keys over ``sigs``, as DuckDB CTE bodies.
+_D_SIGS = "SELECT doc_id, " + ", ".join(
+    "MIN(" + _d_hash64(f"'{i}:' || CAST(h AS VARCHAR)") + f") AS sig{i}"
+    for i in range(N_MINHASH)
+) + " FROM sh GROUP BY doc_id"
+_D_BANDS = " UNION ALL ".join(
+    f"SELECT doc_id, 'b{b}:' || CAST(sig{2*b} AS VARCHAR) || ':' || "
+    f"CAST(sig{2*b+1} AS VARCHAR) AS band_key FROM sigs"
+    for b in range(N_BANDS)
+)
+
 # Corpus with planted duplicates, as a DuckDB CTE body.
 _D_CORPUS = f"""
       SELECT doc_id, text FROM documents
@@ -128,15 +140,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hashed_shingles(text: F.Column, k: int = 3) -> F.Column:
     """Distinct int64-hashed word ``k``-shingles of ``text`` — the
-    shared signature base of the certified ``dedup_minhash_lsh`` AND
-    the streaming near-dup gate (``streaming/dedup.minhash_band_keys``
-    imports this, so batch and stream cannot drift apart on what
-    "near-identical" means; this query's DuckDB oracle pins the
-    expression)."""
+    shared signature base of the certified ``dedup_minhash_lsh``, the
+    near-dup band registry and the streaming near-dup gates (all feed
+    it through :func:`minhash_sigs` to :func:`band_rows`, so batch and
+    stream cannot drift apart on what "near-identical" means; this
+    query's DuckDB oracle pins the expression)."""
     return F.array_distinct(F.transform(word_shingles(text, k), lambda s: hash64(s)))
 
 
-def _minhash_sigs(hsl: DataFrame, keep_cols: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+def minhash_sigs(hsl: DataFrame, keep_cols: tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """(keep_cols…, hs: array<bigint> hashed shingles) → 8 minhash
     values: min over re-salted hashes of each shingle hash. Computed as
     ``array_min(transform(...))`` over the array — a NARROW map stage
@@ -156,9 +168,7 @@ def _minhash_sigs(hsl: DataFrame, keep_cols: tuple[str, ...] = ("doc_id",)) -> D
 
 def band_key_array() -> F.Column:
     """The 4-bands-of-2 LSH band keys (``b{b}:sig:sig`` strings) over
-    the ``sig{i}`` columns :func:`_minhash_sigs` emits — shared with
-    the streaming gate for the same no-drift reason as
-    :func:`hashed_shingles`."""
+    the ``sig{i}`` columns :func:`minhash_sigs` emits."""
     return F.array(
         *[
             F.concat(
@@ -172,6 +182,57 @@ def band_key_array() -> F.Column:
     )
 
 
+def band_rows(sigs: DataFrame) -> DataFrame:
+    """:func:`minhash_sigs` output → exploded ``(carried cols…,
+    band_key)``, 4 band keys per doc. The ONE band signature of the
+    dedup family — the batch pair query, the near-dup band registry and
+    the streaming gates all call it. It starts from the signatures, not
+    the shingles, so the batch query can band the signatures it has
+    persisted: rebuilding the 8 salted-hash projections costs ~0.2 s of
+    Python-side plan building per call. Pure column work, so it runs
+    identically on batch and streaming frames.
+
+    A doc shorter than one shingle has NULL minhashes → NULL band
+    keys; a batch equi-join never matches NULL, but a streaming
+    groupBy WOULD group them — the rows are dropped so shingle-less
+    docs are never near-dup candidates on either engine."""
+    sig_cols = {f"sig{i}" for i in range(N_MINHASH)}
+    carried = [c for c in sigs.columns if c not in sig_cols]
+    return sigs.select(*carried, F.explode(band_key_array()).alias("band_key")).filter(
+        F.col("band_key").isNotNull()
+    )
+
+
+def _jaccard(a: F.Column, b: F.Column) -> F.Column:
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
+
+
+def verified_pairs(bands: DataFrame, hsl: DataFrame, threshold: float) -> DataFrame:
+    """LSH candidates verified by exact Jaccard: ``(doc_a < doc_b,
+    jaccard)`` for every pair sharing a band key (``bands``: doc_id,
+    band_key) whose hashed-shingle sets (``hsl``: doc_id, hs) reach
+    ``threshold``. Ids are joined and deduplicated first, and the
+    shingle arrays joined back at pair grain — collision alone never
+    convicts."""
+    bk = bands.select("doc_id", "band_key")
+    cand = (
+        bk.alias("a")
+        .join(bk.alias("b"), "band_key")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    joined = (
+        cand.join(hsl.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a")), "doc_a")
+        .join(hsl.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b")), "doc_b")
+    )
+    return (
+        joined.select("doc_a", "doc_b", _jaccard(F.col("sh_a"), F.col("sh_b")).alias("j"))
+        .filter(F.col("j") >= threshold)
+        .select("doc_a", "doc_b", F.round("j", 9).alias("jaccard"))
+    )
+
+
 @query(
     "dedup_minhash_lsh",
     oracle=f"""
@@ -182,20 +243,9 @@ def band_key_array() -> F.Column:
                s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS hs
       FROM corpus
     ),
-    sh AS (
-      SELECT doc_id, unnest(hs) AS h FROM hsl
-    ),
-    sigs AS (
-      SELECT doc_id,
-             {", ".join("MIN(" + _d_hash64(f"'{i}:' || CAST(h AS VARCHAR)") + f") AS sig{i}" for i in range(N_MINHASH))}
-      FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, 'b{b}:' || CAST(sig{2*b} AS VARCHAR) || ':' || CAST(sig{2*b+1} AS VARCHAR) AS band_key FROM sigs"
-        for b in range(N_BANDS)
-      )}
-    ),
+    sh AS (SELECT doc_id, unnest(hs) AS h FROM hsl),
+    sigs AS ({_D_SIGS}),
+    bands AS ({_D_BANDS}),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b USING (band_key)
@@ -251,31 +301,11 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     shl.count()  # materialize BEFORE fan-out: the band self-join and the
     # verification join all branch from shl; an unmaterialized cache
     # makes those branches race to recompute every partition.
-    sigs = _minhash_sigs(shl).persist()
+    sigs = minhash_sigs(shl).persist()
     sigs.count()  # same reasoning: the band self-join references sigs
     # TWICE (aliases a/b); racing to fill the cache runs the 8×md5-
     # per-shingle signature map twice.
-    bands = sigs.select("doc_id", F.explode(band_key_array()).alias("band_key"))
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), "band_key")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    joined = (
-        cand.join(shl.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a")), "doc_a")
-        .join(shl.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sh_b")), "doc_b")
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    pairs = (
-        joined.select("doc_a", "doc_b", jac.alias("j"))
-        .filter(F.col("j") >= 0.5)
-        .select("doc_a", "doc_b", F.round("j", 9).alias("jaccard"))
-    )
-    return pairs, [shl, sigs]
+    return verified_pairs(band_rows(sigs), shl, 0.5), [shl, sigs]
 
 
 # ---------------------------------------------------------------------------
@@ -325,7 +355,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.size("hs")
     simhash = None
     for b in range(N_SIMHASH_BITS):
-        # single-parameter lambda (see _minhash_sigs note); the loop
+        # single-parameter lambda (see minhash_sigs note); the loop
         # variable is bound immediately — filter() builds the
         # expression synchronously.
         cnt = F.size(
@@ -364,9 +394,7 @@ def ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = shl.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = shl.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     pairs = a.join(F.broadcast(b), F.col("doc_a") < F.col("doc_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
+    jac = _jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
         pairs.select("doc_a", "doc_b", F.round(jac, 9).alias("jaccard"))
         .orderBy(F.desc("jaccard"), "doc_a", "doc_b")
@@ -494,14 +522,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _d_minhash_pairs_cte() -> str:
     """The verified MinHash-LSH pair pipeline as a reusable CTE body
     (same construction as the dedup_minhash_lsh oracle)."""
-    sigs = ", ".join(
-        "MIN(" + _d_hash64(f"'{i}:' || CAST(h AS VARCHAR)") + f") AS sig{i}"
-        for i in range(N_MINHASH)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, 'b{b}:' || CAST(sig{2*b} AS VARCHAR) || ':' || CAST(sig{2*b+1} AS VARCHAR) AS band_key FROM sigs"
-        for b in range(N_BANDS)
-    )
     return f"""
     corpus AS ({_D_CORPUS}),
     hsl AS (
@@ -511,8 +531,8 @@ def _d_minhash_pairs_cte() -> str:
       FROM corpus
     ),
     sh AS (SELECT doc_id, unnest(hs) AS h FROM hsl),
-    sigs AS (SELECT doc_id, {sigs} FROM sh GROUP BY doc_id),
-    bands AS ({bands}),
+    sigs AS ({_D_SIGS}),
+    bands AS ({_D_BANDS}),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b USING (band_key)
@@ -581,17 +601,6 @@ def _driver_components(a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
     )
 
 
-# Large/small pairs composed per checkpoint+probe. 1 is the MEASURED
-# optimum: the r4 verdict hypothesized 2 would halve the
-# driver-coordination term, but the A/B at sf0.1 read 13.3s vs 56.0s
-# (same session, same load) — AQE already makes one driver round-trip
-# per shuffle stage, so composing pairs saves no coordination, while
-# the doubled plan defeats exchange reuse around star()'s ~4
-# self-references even with a mid-pair persist. Kept as a knob so the
-# experiment is reproducible.
-_STARS_PER_CHECKPOINT = 1
-
-
 def _star_components(edges: DataFrame, max_rounds: int = 50) -> tuple[DataFrame, list]:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -607,8 +616,12 @@ def _star_components(edges: DataFrame, max_rounds: int = 50) -> tuple[DataFrame,
     persisted intermediates for the caller to release (via
     ``functions.cache.release_frame`` — checkpointed frames don't free
     through plain ``unpersist``). Each of the ``max_rounds`` loop
-    iterations composes ``_STARS_PER_CHECKPOINT`` large/small star
-    pairs into one checkpointed stage."""
+    iterations checkpoints ONE large/small star pair: composing two
+    per checkpoint was measured 4× slower at sf0.1 (56.0 s vs 13.3 s,
+    same session and load) — AQE already makes one driver round-trip
+    per shuffle stage, so composing saves no coordination, while the
+    doubled plan defeats exchange reuse around star()'s ~4
+    self-references."""
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         neigh = e if large else e.filter(F.col("b") < F.col("a"))
@@ -648,23 +661,12 @@ def _star_components(edges: DataFrame, max_rounds: int = 50) -> tuple[DataFrame,
         # grows ~6 operators/round and per-round wall time balloons
         # (measured: 6→10s→minutes by round 2 on a 59-edge chain).
         # Checkpointing keeps analysis cost constant; same reason
-        # GraphFrames' connectedComponents checkpoints. See the
-        # _STARS_PER_CHECKPOINT note for why one pair per checkpoint
-        # is the measured optimum; the mid-pair persist below only
-        # matters for cadence >= 2 (star() references its input ~4×
-        # — neigh/src paths plus the union's two und scans — so an
-        # un-materialized pair boundary multiplies recompute ~16×,
-        # measured 6s → 106s at sf0.1).
-        nxt = cur
-        mids = []
-        for i in range(_STARS_PER_CHECKPOINT):
-            nxt = star(star(nxt, large=True), large=False)
-            if i < _STARS_PER_CHECKPOINT - 1:
-                nxt = nxt.persist()
-                mids.append(nxt)
-        nxt = nxt.coalesce(parts).localCheckpoint(eager=True)
-        for m in mids:
-            m.unpersist()  # checkpoint materialized — mid cache is dead
+        # GraphFrames' connectedComponents checkpoints.
+        nxt = (
+            star(star(cur, large=True), large=False)
+            .coalesce(parts)
+            .localCheckpoint(eager=True)
+        )
         # Convergence probe: canonical (a<b) edge multiset fingerprint.
         sig = (
             nxt.filter(F.col("a") < F.col("b"))
@@ -912,16 +914,61 @@ def dedup_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "incremental_ingest_dedup",
-    oracle=f"""
-    WITH corpus AS (
+# The planted corpus plus 10 same-batch exact copies at +300000
+# (sources 30..57 ≡ 0 mod 3, which the +200000 corpus plants don't
+# cover), fingerprinted: the two delta-dedup queries' shared input.
+_D_DELTA_FP = f"""
+    corpus AS (
       {_D_CORPUS}
       UNION ALL
       SELECT doc_id + 300000 AS doc_id, text FROM documents
       WHERE doc_id >= 30 AND doc_id < 60 AND doc_id % 3 = 0
     ),
-    fp AS (SELECT doc_id, md5({_D_NORM_TEXT}) AS fingerprint FROM corpus),
+    fp AS (SELECT doc_id, md5({_D_NORM_TEXT}) AS fingerprint FROM corpus)"""
+
+
+def _delta_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, fingerprint)`` over :data:`_D_DELTA_FP`'s corpus."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    batch_plants = docs.filter(
+        (F.col("doc_id") >= 30) & (F.col("doc_id") < 60) & (F.col("doc_id") % 3 == 0)
+    ).select((F.col("doc_id") + 300000).alias("doc_id"), "text")
+    return (
+        _corpus(spark, sf_dir)
+        .unionByName(batch_plants)
+        .select("doc_id", fingerprint_md5(F.col("text")).alias("fingerprint"))
+    )
+
+
+def exact_verdicts(batch_fp: DataFrame, store: DataFrame | None) -> DataFrame:
+    """The exact-dedup verdict rule: judge ``(doc_id, fingerprint)``
+    batch rows against ``store`` rows ``(fingerprint, corpus_doc_id)``
+    — or against nothing (``None``: the first-ingest case). Returns
+    ``(doc_id, fingerprint, verdict, canonical_doc_id)`` with
+    ``dup_of_corpus`` (canonical = the store's doc) > ``dup_in_batch``
+    (earliest batch doc_id is canonical) > ``new``."""
+    b = batch_fp.withColumn(
+        "first_in_batch", F.min("doc_id").over(Window.partitionBy("fingerprint"))
+    )
+    if store is None:
+        joined = b.withColumn("corpus_doc_id", F.lit(None).cast("long"))
+    else:
+        joined = b.join(store, "fingerprint", "left")
+    return joined.select(
+        "doc_id",
+        "fingerprint",
+        F.when(F.col("corpus_doc_id").isNotNull(), F.lit("dup_of_corpus"))
+        .when(F.col("doc_id") != F.col("first_in_batch"), F.lit("dup_in_batch"))
+        .otherwise(F.lit("new"))
+        .alias("verdict"),
+        F.coalesce("corpus_doc_id", "first_in_batch").alias("canonical_doc_id"),
+    )
+
+
+@query(
+    "incremental_ingest_dedup",
+    oracle=f"""
+    WITH {_D_DELTA_FP},
     batch AS (SELECT doc_id, fingerprint FROM fp WHERE doc_id % 3 = 0),
     store AS (SELECT fingerprint, MIN(doc_id) AS corpus_doc_id
               FROM fp WHERE doc_id % 3 <> 0 GROUP BY fingerprint),
@@ -954,11 +1001,10 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously processed checksums the same way
     (`code/python/ocr_agent_8_29.py:21-33`).
 
-    Split: batch = ``doc_id % 3 == 0`` of the planted corpus plus 10
-    extra same-batch copies at +300000 (sources 30..57 ≡ 0 mod 3, which
-    the +200000 corpus plants don't cover) — mod 3 splits each planted
-    exact pair (i, i+200000) across the boundary for i ≢ 2, so all
-    three verdicts are exercised and oracle-checked.
+    Split: batch = ``doc_id % 3 == 0`` of :func:`_delta_fingerprints`
+    (the planted corpus plus the +300000 same-batch copies) — mod 3
+    splits each planted exact pair (i, i+200000) across the boundary
+    for i ≢ 2, so all three verdicts are exercised and oracle-checked.
 
     100 TB shape: the store side is a *fingerprint table*, not the
     corpus — 16 bytes/doc, maintained incrementally (this query derives
@@ -968,33 +1014,14 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-on-batch-only bucket join: the daily delta (≪ corpus)
     shuffles, the store never rewrites, and the within-batch window is
     per-fingerprint grain bounded by the batch itself."""
-    c = _corpus(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batch_plants = docs.filter(
-        (F.col("doc_id") >= 30) & (F.col("doc_id") < 60) & (F.col("doc_id") % 3 == 0)
-    ).select((F.col("doc_id") + 300000).alias("doc_id"), "text")
-    fp = c.unionByName(batch_plants).select(
-        "doc_id", fingerprint_md5(F.col("text")).alias("fingerprint")
-    )
-    batch = fp.filter(F.col("doc_id") % 3 == 0)
+    fp = _delta_fingerprints(spark, sf_dir)
     store = (
         fp.filter(F.col("doc_id") % 3 != 0)
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("corpus_doc_id"))
     )
-    b = batch.withColumn(
-        "first_in_batch",
-        F.min("doc_id").over(Window.partitionBy("fingerprint")),
-    )
     return (
-        b.join(store, "fingerprint", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("corpus_doc_id").isNotNull(), F.lit("dup_of_corpus"))
-            .when(F.col("doc_id") != F.col("first_in_batch"), F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.coalesce("corpus_doc_id", "first_in_batch").alias("canonical_doc_id"),
-        )
+        exact_verdicts(fp.filter(F.col("doc_id") % 3 == 0), store)
+        .select("doc_id", "verdict", "canonical_doc_id")
         .orderBy("doc_id")
     )

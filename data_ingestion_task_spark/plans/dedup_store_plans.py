@@ -34,16 +34,11 @@ is that registry as a distributed table.
 
 from __future__ import annotations
 
-import hashlib
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint_md5
-from ..sources.compact import _hadoop_fs
-from ..sources.tables import load_table
-from ..sources.upsert import KeyedParquetStore
-from .dedup_plans import _D_CORPUS, _D_NORM_TEXT, _corpus
+from ..sources.upsert import KeyedParquetStore, fresh_store_root
+from .dedup_plans import _D_DELTA_FP, _delta_fingerprints, exact_verdicts
 from .registry import query
 
 _N_BUCKETS = 8
@@ -63,8 +58,7 @@ def delta_dedup_verdicts(
     """Judge a batch of ``(doc_id, fingerprint)`` rows against the
     maintained store: returns ``(doc_id, fingerprint, verdict,
     canonical_doc_id)`` with the same three-way verdict semantics as
-    ``incremental_ingest_dedup`` (``dup_of_corpus`` > ``dup_in_batch``
-    > ``new``; earliest batch doc_id is the within-batch canonical).
+    ``incremental_ingest_dedup`` (both apply ``exact_verdicts``).
     A store that has never been merged into judges everything
     batch-locally (the first-ingest case).
 
@@ -82,23 +76,11 @@ def delta_dedup_verdicts(
     materialize (or :func:`admit_new_fingerprints`, which forces the
     admitted rows before any bucket is swapped), and do not re-collect
     a stale verdict frame after a later merge has rewritten buckets."""
-    b = batch_fp.withColumn(
-        "first_in_batch", F.min("doc_id").over(Window.partitionBy("fingerprint"))
-    )
     try:
         s = store.read_for(batch_fp).select("fingerprint", "corpus_doc_id")
-        joined = b.join(s, "fingerprint", "left")
     except FileNotFoundError:
-        joined = b.withColumn("corpus_doc_id", F.lit(None).cast("long"))
-    return joined.select(
-        "doc_id",
-        "fingerprint",
-        F.when(F.col("corpus_doc_id").isNotNull(), F.lit("dup_of_corpus"))
-        .when(F.col("doc_id") != F.col("first_in_batch"), F.lit("dup_in_batch"))
-        .otherwise(F.lit("new"))
-        .alias("verdict"),
-        F.coalesce("corpus_doc_id", "first_in_batch").alias("canonical_doc_id"),
-    )
+        s = None
+    return exact_verdicts(batch_fp, s)
 
 
 def admit_new_fingerprints(verdicts: DataFrame, store: KeyedParquetStore) -> dict:
@@ -118,13 +100,7 @@ def admit_new_fingerprints(verdicts: DataFrame, store: KeyedParquetStore) -> dic
 @query(
     "incremental_store_dedup",
     oracle=f"""
-    WITH corpus AS (
-      {_D_CORPUS}
-      UNION ALL
-      SELECT doc_id + 300000 AS doc_id, text FROM documents
-      WHERE doc_id >= 30 AND doc_id < 60 AND doc_id % 3 = 0
-    ),
-    fp AS (SELECT doc_id, md5({_D_NORM_TEXT}) AS fingerprint FROM corpus),
+    WITH {_D_DELTA_FP},
     d1 AS (SELECT doc_id, fingerprint FROM fp WHERE doc_id % 3 <> 0),
     d2 AS (SELECT doc_id, fingerprint FROM fp WHERE doc_id % 3 = 0),
     b1 AS (SELECT doc_id, fingerprint,
@@ -166,27 +142,12 @@ def incremental_store_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh per call under the warehouse dir (determinism across driver
     testdata regenerations), md5(sf_dir)-tagged so datasets never
     share a root."""
-    c = _corpus(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batch_plants = docs.filter(
-        (F.col("doc_id") >= 30) & (F.col("doc_id") < 60) & (F.col("doc_id") % 3 == 0)
-    ).select((F.col("doc_id") + 300000).alias("doc_id"), "text")
-    fp = c.unionByName(batch_plants).select(
-        "doc_id", fingerprint_md5(F.col("text")).alias("fingerprint")
-    )
+    fp = _delta_fingerprints(spark, sf_dir)
     d1 = fp.filter(F.col("doc_id") % 3 != 0)
     d2 = fp.filter(F.col("doc_id") % 3 == 0)
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    tag = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:8]
-    root = f"{wh}/fp_store_{tag}"
-    # fresh store per call — delete is guarded to the query's own
-    # tagged directory under the warehouse
-    assert root.endswith(f"/fp_store_{tag}")
-    jvm, fs, hpath = _hadoop_fs(spark, root)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-    store = fingerprint_store(spark, root, n_buckets=_N_BUCKETS)
+    store = fingerprint_store(
+        spark, fresh_store_root(spark, "fp_store", sf_dir), n_buckets=_N_BUCKETS
+    )
 
     v1 = delta_dedup_verdicts(d1, store)
     # judge-then-admit: merge() materializes the admitted rows before

@@ -55,26 +55,24 @@ module is that standing-index discipline for MinHash band claims.
 
 from __future__ import annotations
 
-import hashlib
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import words
-from ..sources.compact import _hadoop_fs
 from ..sources.tables import load_table
-from ..sources.upsert import KeyedParquetStore
+from ..sources.upsert import KeyedParquetStore, fresh_store_root
 from .dedup_plans import (
-    N_BANDS,
-    N_MINHASH,
     _corpus,
-    _d_hash64,
+    _D_BANDS,
     _D_CORPUS,
     _D_SHINGLES,
+    _D_SIGS,
     _D_WS,
-    _minhash_sigs,
-    band_key_array,
+    _jaccard,
+    band_rows,
     hashed_shingles,
+    minhash_sigs,
+    verified_pairs,
 )
 from .registry import query
 
@@ -90,58 +88,35 @@ def neardup_band_store(
     return KeyedParquetStore(spark, root, key="band_key", n_buckets=n_buckets)
 
 
-def _jaccard(a: Column, b: Column) -> Column:
-    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
-        F.array_union(a, b)
-    )
-
-
-def band_rows(batch_docs: DataFrame) -> DataFrame:
-    """(doc_id, hs) → exploded ``(doc_id, hs, band_key)``: the SAME
-    shingle→minhash→band signature as the certified
-    ``dedup_minhash_lsh`` (shared ``_minhash_sigs`` /
-    ``band_key_array``, so batch, stream, and this registry cannot
-    drift on what "near-identical" means)."""
-    sigs = _minhash_sigs(batch_docs, keep_cols=("doc_id", "hs"))
-    return sigs.select(
-        "doc_id", "hs", F.explode(band_key_array()).alias("band_key")
-    ).filter(F.col("band_key").isNotNull())
-
-
 def delta_neardup_verdicts(
     batch_docs: DataFrame,
+    bands: DataFrame,
     store: KeyedParquetStore,
     threshold: float = _ND_THRESHOLD,
-    bands: DataFrame | None = None,
 ) -> DataFrame:
     """Judge a batch of ``(doc_id, hs)`` docs against the maintained
     band registry: returns ``(doc_id, verdict, canonical_doc_id)``
-    under the module-docstring semantics.
+    under the module-docstring semantics. ``bands`` is the batch's
+    band grain, ``band_rows(minhash_sigs(batch_docs, ("doc_id", "hs")))``,
+    PERSISTED by the caller: the judge references it four times (the
+    pruning probe's action, the corpus join, both sides of the pair
+    self-join), the admit a fifth, and the 8-salted-md5 minhash map
+    is the expensive stage.
 
     Contract: ``batch_docs`` carries UNIQUE doc_ids (the same
-    one-row-per-key contract the exact store's judge states) — the
-    pair self-join filters ``a.doc_id > b.doc_id``, so two rows
-    sharing a doc_id (inbox file duplication) would each read 'new'
-    and both land in a caller's verdict log (ADVICE r11 #3).
-    ``dropDuplicates(['doc_id'])`` upstream if a source can repeat. The store side is
-    bucket-pruned to the batch's band keys (``read_for`` — the same
-    hit-bucket discipline as the exact judge), and verification
-    compares int64 shingle arrays already in hand on both sides — no
-    corpus read, no all-pairs scan.
+    one-row-per-key contract the exact store's judge states) — two
+    rows sharing a doc_id (inbox file duplication) would never pair
+    with each other, so both would read 'new' and land in a caller's
+    verdict log (ADVICE r11 #3). ``dropDuplicates(['doc_id'])``
+    upstream if a source can repeat. The store side is bucket-pruned
+    to the batch's band keys (``read_for`` — the same hit-bucket
+    discipline as the exact judge), and verification compares int64
+    shingle arrays already in hand on both sides — no corpus read, no
+    all-pairs scan.
 
     Like the exact judge, the returned frame's lineage READS the
     store: judge, materialize (or :func:`admit_new_band_rows`, which
-    forces the verdicts first), never re-collect after a later merge.
-
-    ``bands``: optionally the PERSISTED output of
-    :func:`band_rows(batch_docs)` — the judge references the band
-    grain four times (the pruning probe's action, the corpus join,
-    both sides of the pair self-join) and the 8-salted-md5 minhash
-    map is the expensive stage; callers that also admit should
-    compute it once, persist, and pass it here and to
-    :func:`admit_new_band_rows`."""
-    if bands is None:
-        bands = band_rows(batch_docs)
+    forces the verdicts first), never re-collect after a later merge."""
     try:
         s = store.read_for(bands.select("band_key")).select(
             "band_key",
@@ -158,26 +133,11 @@ def delta_neardup_verdicts(
         corpus_hits = batch_docs.select("doc_id").limit(0).withColumn(
             "_corpus_canonical", F.lit(None).cast("long")
         )
-    # within-batch candidates: band collision, smaller-id neighbor,
-    # then EXACT Jaccard — ids first, arrays joined back at pair grain
-    # (the certified dedup_minhash_lsh candidate shape)
-    bk = bands.select("doc_id", "band_key")
-    cand = (
-        bk.alias("a")
-        .join(bk.alias("b"), "band_key")
-        .filter(F.col("a.doc_id") > F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("_da"), F.col("b.doc_id").alias("_db"))
-        .distinct()
-    )
-    hs_of = lambda n: batch_docs.select(  # noqa: E731
-        F.col("doc_id").alias(n), F.col("hs").alias(f"_hs{n}")
-    )
+    # within-batch: each doc's smallest verified band-colliding neighbor
     batch_hits = (
-        cand.join(hs_of("_da"), "_da")
-        .join(hs_of("_db"), "_db")
-        .filter(_jaccard(F.col("_hs_da"), F.col("_hs_db")) >= threshold)
-        .groupBy(F.col("_da").alias("doc_id"))
-        .agg(F.min("_db").alias("_batch_canonical"))
+        verified_pairs(bands, batch_docs, threshold)
+        .groupBy(F.col("doc_b").alias("doc_id"))
+        .agg(F.min("doc_a").alias("_batch_canonical"))
     )
     return (
         batch_docs.select("doc_id")
@@ -197,10 +157,7 @@ def delta_neardup_verdicts(
 
 
 def admit_new_band_rows(
-    verdicts: DataFrame,
-    batch_docs: DataFrame,
-    store: KeyedParquetStore,
-    bands: DataFrame | None = None,
+    verdicts: DataFrame, bands: DataFrame, store: KeyedParquetStore
 ) -> dict:
     """MERGE a judged batch's genuinely-new docs' band claims into the
     registry: ``verdict = 'new'`` docs only, reduced to the MIN-doc_id
@@ -208,14 +165,11 @@ def admit_new_band_rows(
     already holds (a failed-verify collision must not steal an
     existing band — first claimant keeps it forever). The anti-join's
     store read is bucket-pruned like the judge's. Returns the store's
-    merge audit dict. ``bands``: the same persisted band grain the
-    judge took (see :func:`delta_neardup_verdicts`)."""
+    merge audit dict. ``bands``: the same persisted ``(doc_id, hs,
+    band_key)`` grain the judge took (see
+    :func:`delta_neardup_verdicts`)."""
     new_docs = verdicts.filter(F.col("verdict") == "new").select("doc_id")
-    if bands is None:
-        bands = band_rows(batch_docs.join(new_docs, "doc_id"))
-        nb = bands
-    else:
-        nb = bands.join(new_docs, "doc_id")
+    nb = bands.join(new_docs, "doc_id")
     reduced = (
         nb.groupBy("band_key")
         .agg(F.min_by(F.struct("doc_id", "hs"), F.col("doc_id")).alias("_w"))
@@ -237,15 +191,6 @@ _D_JAC = (
     "CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)"
     " / len(list_distinct(x.hs || y.hs))"
 )
-_D_SIG_MINS = ", ".join(
-    "MIN(" + _d_hash64(f"'{i}:' || CAST(h AS VARCHAR)") + f") AS sig{i}"
-    for i in range(N_MINHASH)
-)
-_D_BANDS = " UNION ALL ".join(
-    f"SELECT doc_id, 'b{b}:' || CAST(sig{2*b} AS VARCHAR) || ':' || "
-    f"CAST(sig{2*b+1} AS VARCHAR) AS band_key FROM sigs"
-    for b in range(N_BANDS)
-)
 
 
 @query(
@@ -266,7 +211,7 @@ _D_BANDS = " UNION ALL ".join(
       FROM corpus
     ),
     sh AS (SELECT doc_id, unnest(hs) AS h FROM hsl),
-    sigs AS (SELECT doc_id, {_D_SIG_MINS} FROM sh GROUP BY doc_id),
+    sigs AS ({_D_SIGS}),
     bands AS ({_D_BANDS}),
     d1 AS (SELECT doc_id FROM corpus WHERE doc_id % 3 <> 0),
     d2 AS (SELECT doc_id FROM corpus WHERE doc_id % 3 = 0),
@@ -351,21 +296,17 @@ def incremental_store_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hsl.count()  # materialize before the judge fans out over it
     d1 = hsl.filter(F.col("doc_id") % 3 != 0)
     d2 = hsl.filter(F.col("doc_id") % 3 == 0)
+    store = neardup_band_store(
+        spark, fresh_store_root(spark, "nd_store", sf_dir), n_buckets=_N_BUCKETS
+    )
 
-    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    tag = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:8]
-    root = f"{wh}/nd_store_{tag}"
-    assert root.endswith(f"/nd_store_{tag}")  # delete guarded to own dir
-    jvm, fs, hpath = _hadoop_fs(spark, root)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-    store = neardup_band_store(spark, root, n_buckets=_N_BUCKETS)
-
-    b1 = band_rows(d1).persist()  # the 8-salted-md5 minhash map runs
-    b2 = band_rows(d2).persist()  # once per delta, not once per use
-    v1 = delta_neardup_verdicts(d1, store, bands=b1)
-    admit_new_band_rows(v1, d1, store, bands=b1)
-    v2 = delta_neardup_verdicts(d2, store, bands=b2)
+    keep = ("doc_id", "hs")
+    # the 8-salted-md5 minhash map runs once per delta, not once per use
+    b1 = band_rows(minhash_sigs(d1, keep)).persist()
+    b2 = band_rows(minhash_sigs(d2, keep)).persist()
+    v1 = delta_neardup_verdicts(d1, b1, store)
+    admit_new_band_rows(v1, b1, store)
+    v2 = delta_neardup_verdicts(d2, b2, store)
     cols = ["doc_id", "verdict", "canonical_doc_id"]
     out = v1.select(*cols).unionByName(v2.select(*cols)).orderBy("doc_id")
     out._cached_deps = [hsl, b1, b2]

@@ -31,14 +31,11 @@ footprint is the store's ≤ n_buckets hit-bucket list — no data rows.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.compact import _hadoop_fs
 from ..sources.tables import load_table
-from ..sources.upsert import KeyedParquetStore
+from ..sources.upsert import KeyedParquetStore, fresh_store_root
 from .registry import query
 
 _N_BUCKETS = 8
@@ -84,17 +81,11 @@ def upsert_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lower("o_orderstatus").alias("o_orderstatus"),
         (price * 2).cast("decimal(18,2)").alias("t"),
     )
-    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    tag = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:8]
-    root = f"{wh}/upsert_store_{tag}"
-    # fresh store per call (module docstring) — delete is guarded to
-    # the query's own tagged directory under the warehouse
-    assert root.endswith(f"/upsert_store_{tag}")
-    jvm, fs, hpath = _hadoop_fs(spark, root)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
     store = KeyedParquetStore(
-        spark, root, key="o_orderkey", n_buckets=_N_BUCKETS
+        spark,
+        fresh_store_root(spark, "upsert_store", sf_dir),  # module docstring
+        key="o_orderkey",
+        n_buckets=_N_BUCKETS,
     )
     store.merge(base)
     store.merge(delta)

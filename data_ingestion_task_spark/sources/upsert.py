@@ -53,6 +53,7 @@ materialization is the ≤ n_buckets hit-bucket list.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from collections.abc import Callable, Iterable
@@ -66,6 +67,23 @@ from .compact import _hadoop_fs
 META_FILE = "_store_meta.json"
 TMP_SUFFIX = ".__upsert_tmp__"
 OLD_SUFFIX = ".__upsert_old__"
+
+
+def fresh_store_root(spark: SparkSession, name: str, sf_dir: str) -> str:
+    """An EMPTY store root ``{warehouse}/{name}_{md5(sf_dir)[:8]}`` for a
+    query that builds its store from scratch on every call. The tag
+    keeps two datasets from sharing a root; the per-call delete keeps a
+    dataset regenerated at the same path from inheriting ghost keys
+    (``plans/upsert_plans.py`` docstring)."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    tag = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:8]
+    root = f"{wh}/{name}_{tag}"
+    # the delete is guarded to the query's own tagged directory
+    assert root.endswith(f"/{name}_{tag}")
+    _, fs, hpath = _hadoop_fs(spark, root)
+    if fs.exists(hpath):
+        fs.delete(hpath, True)
+    return root
 
 
 class KeyedParquetStore:

@@ -92,7 +92,7 @@ def first_occurrence_fingerprints(docs: DataFrame, text_col: str = "text") -> Da
 #
 # The near-dup twin of the exact gate above, completing the
 # batch/stream symmetry: the certified batch query
-# ``dedup_minhash_lsh`` (plans/dedup_plans.py:183) finds near-dup
+# ``dedup_minhash_lsh`` (plans/dedup_plans.py) finds near-dup
 # PAIRS over the accumulated corpus; this gate drops an ARRIVING doc
 # when any of its LSH band keys was already claimed by a doc admitted
 # within the horizon — the at-ingest judgment call a 100 TB/day
@@ -113,44 +113,8 @@ def first_occurrence_fingerprints(docs: DataFrame, text_col: str = "text") -> Da
 # a plain intra-batch aggregate (foreachBatch), not a second stateful
 # operator.
 
-#: Same knobs as the batch query (plans/dedup_plans.py:36-37).
-_ND_SHINGLE_K = 3
-
 _ND_OUT_SCHEMA = "doc_id long, ts_ms long, band_dup boolean"
 _ND_STATE_SCHEMA = "claimed boolean"
-
-
-def minhash_band_keys(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, text) → exploded (id, *carry, band_key): the SAME
-    shingle → minhash → band signature as the certified
-    ``dedup_minhash_lsh`` — not by copy discipline but by sharing
-    that module's expression builders (``hashed_shingles``,
-    ``_minhash_sigs``, ``band_key_array``), so a change to the batch
-    salting or band layout changes the gate with it (code-review r9).
-    Pure column work, so it runs identically on batch and streaming
-    frames — the test replays the stream's claims through the batch
-    output of this function."""
-    from ..plans.dedup_plans import _minhash_sigs, band_key_array, hashed_shingles
-
-    hsl = df.select(
-        id_col,
-        *carry_cols,
-        hashed_shingles(F.col(text_col), _ND_SHINGLE_K).alias("hs"),
-    )
-    sigs = _minhash_sigs(hsl, keep_cols=(id_col, *carry_cols))
-    # A doc shorter than one shingle has NULL minhashes → NULL band
-    # keys; the batch query's equi-join never matches NULL, but a
-    # streaming groupBy WOULD group them — drop the rows so shingle-less
-    # docs are never near-dup candidates on either engine (they carry
-    # no signature to collide on).
-    return sigs.select(
-        id_col, *carry_cols, F.explode(band_key_array()).alias("band_key")
-    ).filter(F.col("band_key").isNotNull())
 
 
 def _claim_bands_fn(horizon_ms: int):
@@ -189,10 +153,7 @@ def _claim_bands_fn(horizon_ms: int):
 
 
 def near_dedup_band_verdicts(
-    stream: DataFrame,
-    horizon_s: int = 600,
-    ts_col: str = "_arrival_ts",
-    text_col: str = "text",
+    stream: DataFrame, horizon_s: int = 600, ts_col: str = "_arrival_ts"
 ) -> DataFrame:
     """Streaming (doc_id, ts_ms, band_dup) band-grain verdicts: one row
     per (doc, band), ``band_dup`` true when that band key was claimed
@@ -201,18 +162,23 @@ def near_dedup_band_verdicts(
     inbox regime). Roll up ``max(band_dup)`` per doc within the
     micro-batch for the admission verdict — :func:`start_neardup_ingest`
     wires that rollup; this stage stays band-grain so the state stays
-    O(1) per key. ``ts_ms`` is derived JVM-side (``unix_millis``) so
-    the Python handler never touches timezone-laden timestamps (the
-    streaming/stateful.py lesson)."""
+    O(1) per key. The band keys are the certified batch signature
+    (``plans/dedup_plans.band_rows``), so a change to the batch salting
+    or band layout changes the gate with it. ``ts_ms`` is derived
+    JVM-side (``unix_millis``) so the Python handler never touches
+    timezone-laden timestamps (the streaming/stateful.py lesson)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from ..plans.dedup_plans import band_rows, hashed_shingles, minhash_sigs
 
     if ts_col not in stream.columns:
         stream = stream.withColumn(ts_col, F.current_timestamp())
-    banded = minhash_band_keys(
-        stream.withWatermark(ts_col, f"{horizon_s} seconds"),
-        text_col=text_col,
-        carry_cols=(ts_col,),
-    ).withColumn("ts_ms", F.unix_millis(F.col(ts_col)))
+    hsl = stream.withWatermark(ts_col, f"{horizon_s} seconds").select(
+        "doc_id", ts_col, hashed_shingles(F.col("text"), 3).alias("hs")
+    )
+    banded = band_rows(minhash_sigs(hsl, ("doc_id", ts_col))).withColumn(
+        "ts_ms", F.unix_millis(F.col(ts_col))
+    )
     return banded.groupBy("band_key").applyInPandasWithState(
         _claim_bands_fn(horizon_s * 1000),
         outputStructType=_ND_OUT_SCHEMA,
@@ -247,11 +213,7 @@ def start_neardup_ingest(
     exercised. ``availableNow`` drains the backlog and stops (the test
     run mode). Admission = ``filter(~near_dup)`` over the verdict log
     joined back to the doc store."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(inbox)
-    )
+    stream = document_stream(spark, inbox, schema, max_files_per_trigger)
     if consolidate:
         stream = ingest_transform(stream)
     verdicts = near_dedup_band_verdicts(stream, horizon_s=horizon_s)

@@ -56,13 +56,16 @@ def ingest_transform(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFra
     )
 
 
-def document_stream(spark: SparkSession, inbox: str, schema: StructType) -> DataFrame:
+def document_stream(
+    spark: SparkSession, inbox: str, schema: StructType, max_files_per_trigger: int = 64
+) -> DataFrame:
     """Watched-folder parquet source (the OCR agent's auto-detect
-    inbox). ``maxFilesPerTrigger`` keeps micro-batches bounded when a
-    backlog accumulates."""
+    inbox). ``max_files_per_trigger`` keeps micro-batches bounded when
+    a backlog accumulates; tests pass 1 to force one micro-batch per
+    file."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 64)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(inbox)
     )
 

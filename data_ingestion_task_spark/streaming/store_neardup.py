@@ -9,9 +9,17 @@ still rejected: the registry is ``plans/neardup_store_plans.py``'s
 and convicted only by exact Jaccard on stored shingle arrays.
 
 Shape: ``foreachBatch`` — each micro-batch's docs are shingle-hashed
-(the certified ``dedup_minhash_lsh`` signature), judged against the
-store (bucket-pruned band join), verdicts append to an audit log, and
-genuinely-new docs' band claims MERGE back.
+and banded (``plans/dedup_plans.band_rows``, the certified
+``dedup_minhash_lsh`` signature), judged against the store
+(bucket-pruned band join), verdicts append to an audit log, and
+genuinely-new docs' band claims MERGE back. That body is
+:func:`neardup_gate`; it runs under the same entry point as the exact
+registry, ``store_dedup.start_store_gate_ingest`` — with a
+``watermark``, an EXACT RAM stage absorbs within-horizon identical
+re-posts at fingerprint-row state cost (the high-frequency case:
+re-crawls, retry storms), while NEAR variants, and exact re-posts past
+the horizon or from a previous run, reach the registry, which convicts
+the latter at Jaccard 1.0.
 
 Exactly-once at the STORE grain, by construction: a replayed
 micro-batch re-judges against a store that already holds its band
@@ -29,48 +37,43 @@ sessions and probes arrivals against the standing index
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
-from ..plans.dedup_plans import hashed_shingles
+from ..plans.dedup_plans import band_rows, hashed_shingles, minhash_sigs
 from ..plans.neardup_store_plans import (
     admit_new_band_rows,
-    band_rows,
     delta_neardup_verdicts,
     neardup_band_store,
 )
-from .dedup import dedup_stream
-from .ingest import ingest_transform
+from .store_dedup import Gate
 
 __all__ = [
     "neardup_band_store",
-    "start_dual_neardup_ingest",
-    "start_store_neardup_ingest",
+    "neardup_gate",
     "store_admitted",
 ]
 
 
-def _neardup_gate(store, verdict_dir: str, text_col: str, threshold: float):
-    """The shared foreachBatch body: shingle-hash → band grain
+def neardup_gate(store, verdict_dir: str) -> Gate:
+    """The band registry's foreachBatch body: shingle-hash → band grain
     (persisted — the 8-salted-md5 minhash map runs once, not once per
-    judge/admit reference) → judge ONCE against the pre-merge store →
-    append verdict log → admit (the delta_neardup_verdicts staleness
-    contract: both consumers read the persisted frame)."""
+    judge/admit reference) → judge ONCE against the pre-merge store at
+    the registry's Jaccard threshold → append the ``(doc_id, verdict,
+    canonical_doc_id)`` audit log at ``verdict_dir`` → admit (the
+    delta_neardup_verdicts staleness contract: both consumers read the
+    persisted frame)."""
 
     def _gate(batch: DataFrame, _batch_id: int) -> None:
         docs = batch.select(
-            "doc_id", hashed_shingles(F.col(text_col), 3).alias("hs")
+            "doc_id", hashed_shingles(F.col("text"), 3).alias("hs")
         ).persist()
-        bands = band_rows(docs).persist()
+        bands = band_rows(minhash_sigs(docs, ("doc_id", "hs"))).persist()
         try:
-            verdicts = delta_neardup_verdicts(
-                docs, store, threshold=threshold, bands=bands
-            ).persist()
+            verdicts = delta_neardup_verdicts(docs, bands, store).persist()
             try:
                 verdicts.write.mode("append").parquet(verdict_dir)
-                admit_new_band_rows(verdicts, docs, store, bands=bands)
+                admit_new_band_rows(verdicts, bands, store)
             finally:
                 verdicts.unpersist()
         finally:
@@ -78,83 +81,6 @@ def _neardup_gate(store, verdict_dir: str, text_col: str, threshold: float):
             docs.unpersist()
 
     return _gate
-
-
-def start_store_neardup_ingest(
-    spark: SparkSession,
-    inbox: str,
-    checkpoint: str,
-    schema: StructType,
-    store,
-    verdict_dir: str,
-    text_col: str = "text",
-    threshold: float = 0.5,
-    max_files_per_trigger: int = 64,
-    query_name: str = "store_neardup_ingest",
-) -> StreamingQuery:
-    """inbox → shingle-hash each micro-batch → judge against the band
-    registry → append ``(doc_id, verdict, canonical_doc_id)`` to the
-    audit log at ``verdict_dir`` → MERGE new docs' band claims back.
-    ``availableNow`` drains the backlog and stops (the test run mode);
-    production drops the trigger."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(inbox)
-    )
-
-    return (
-        stream.writeStream.foreachBatch(_neardup_gate(store, verdict_dir, text_col, threshold))
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_dual_neardup_ingest(
-    spark: SparkSession,
-    inbox: str,
-    checkpoint: str,
-    schema: StructType,
-    store,
-    verdict_dir: str,
-    watermark: str = "10 minutes",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    max_files_per_trigger: int = 64,
-    query_name: str = "dual_neardup_ingest",
-) -> StreamingQuery:
-    """The near-dup analogue of ``store_dedup.start_dual_dedup_ingest``:
-    inbox → consolidate → EXACT watermark RAM gate
-    (``dropDuplicatesWithinWatermark`` on the content fingerprint) →
-    band-registry store gate, one query, one checkpoint.
-
-    Split rationale, stated honestly: the RAM stage absorbs only
-    within-horizon EXACT re-posts — which is the high-frequency case
-    (re-crawls, retry storms re-post identical bytes) — at
-    fingerprint-row state cost and zero disk I/O. NEAR variants always
-    reach the store gate; so do exact re-posts past the horizon or
-    from a previous run, where the band registry convicts them at
-    Jaccard 1.0. (The horizon-bounded band-claim machine in
-    ``streaming/dedup.py`` is the RAM-only alternative when near-dup
-    absorption itself must be memory-resident; it cannot front THIS
-    gate in one query because its stateful output is band-grain and
-    no longer carries the text the store judge needs.)"""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(inbox)
-    )
-    gated = dedup_stream(ingest_transform(stream), watermark=watermark)
-
-    return (
-        gated.writeStream.foreachBatch(_neardup_gate(store, verdict_dir, text_col, threshold))
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def store_admitted(store) -> DataFrame:

@@ -8,10 +8,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_ingestion_task_spark.plans.dedup_plans import hashed_shingles
+from data_ingestion_task_spark.plans.dedup_plans import (
+    band_rows,
+    hashed_shingles,
+    minhash_sigs,
+)
 from data_ingestion_task_spark.plans.neardup_store_plans import (
     admit_new_band_rows,
-    band_rows,
     delta_neardup_verdicts,
     incremental_store_neardup,
     neardup_band_store,
@@ -31,6 +34,10 @@ def _docs(spark, rows):
     )
 
 
+def _bands(docs):
+    return band_rows(minhash_sigs(docs, ("doc_id", "hs")))
+
+
 def _verdicts(df):
     return {
         r["doc_id"]: (r["verdict"], r["canonical_doc_id"]) for r in df.collect()
@@ -41,23 +48,23 @@ def test_two_deltas_first_ingested_wins(spark, tmp_path):
     store = neardup_band_store(spark, str(tmp_path / "nd"), n_buckets=4)
     # delta 1: near-A claims first; an identical re-send dups in batch
     d1 = _docs(spark, [(5, _NEAR_A), (6, _B), (7, _NEAR_A)])
-    v1 = delta_neardup_verdicts(d1, store)
+    v1 = delta_neardup_verdicts(d1, _bands(d1), store)
     assert _verdicts(v1) == {5: ("new", 5), 6: ("new", 6), 7: ("dup_in_batch", 5)}
-    admit_new_band_rows(v1, d1, store)
+    admit_new_band_rows(v1, _bands(d1), store)
     # delta 2: the ORIGINAL A arrives after its near-copy was admitted
     # -> dup_of_corpus with the PLANT as canonical; a smaller doc_id
     # near-B still loses to the stored claim (first-ingested, not min);
     # a fresh pair inside the batch is dup_in_batch against the
     # now-non-empty store
     d2 = _docs(spark, [(10, _A), (1, _NEAR_B), (11, _C), (12, _NEAR_C)])
-    v2 = delta_neardup_verdicts(d2, store)
+    v2 = delta_neardup_verdicts(d2, _bands(d2), store)
     assert _verdicts(v2) == {
         10: ("dup_of_corpus", 5),
         1: ("dup_of_corpus", 6),
         11: ("new", 11),
         12: ("dup_in_batch", 11),
     }
-    admit_new_band_rows(v2, d2, store)
+    admit_new_band_rows(v2, _bands(d2), store)
     admitted = {
         r["canonical_doc_id"]
         for r in store.read().select("canonical_doc_id").distinct().collect()
@@ -72,22 +79,22 @@ def test_failed_verify_collision_never_steals_band(spark, tmp_path):
     forever — the LSH recall trade the module documents)."""
     store = neardup_band_store(spark, str(tmp_path / "nds"), n_buckets=4)
     d1 = _docs(spark, [(1, _A)])
-    v1 = delta_neardup_verdicts(d1, store, threshold=0.99)
-    admit_new_band_rows(v1, d1, store)
+    v1 = delta_neardup_verdicts(d1, _bands(d1), store, threshold=0.99)
+    admit_new_band_rows(v1, _bands(d1), store)
     before = {
         r["band_key"]: r["canonical_doc_id"] for r in store.read().collect()
     }
     assert set(before.values()) == {1}
 
     d2 = _docs(spark, [(2, _NEAR_A)])
-    v2 = delta_neardup_verdicts(d2, store, threshold=0.99)
+    v2 = delta_neardup_verdicts(d2, _bands(d2), store, threshold=0.99)
     assert _verdicts(v2) == {2: ("new", 2)}  # collided, verify failed
     # the pair must actually share at least one band (or this test
     # exercises nothing) — check against doc 2's derived band keys
-    b2 = {r["band_key"] for r in band_rows(d2).collect()}
+    b2 = {r["band_key"] for r in _bands(d2).collect()}
     shared = set(before) & b2
     assert shared, "near-copy must band-collide with the original"
-    admit_new_band_rows(v2, d2, store)
+    admit_new_band_rows(v2, _bands(d2), store)
     after = {r["band_key"]: r["canonical_doc_id"] for r in store.read().collect()}
     for k in shared:
         assert after[k] == before[k] == 1  # claim not stolen

@@ -59,3 +59,23 @@ def test_every_query_is_either_certified_or_in_prefix_head():
     names = list(registry.queries_dict())
     uncert = registry.uncertified_names()
     assert set(names[: len(uncert)]) == set(uncert)
+
+
+def test_uncertified_queries_fit_the_check_window():
+    """The external correctness check covers only the first
+    CHECK_WINDOW queries of queries_dict(); more uncertified ones than
+    that and an edited query escapes the check."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "round_start.py"
+    )
+    spec = importlib.util.spec_from_file_location("round_start", path)
+    round_start = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(round_start)
+    uncert = registry.uncertified_names()
+    assert len(uncert) <= round_start.CHECK_WINDOW, (
+        f"{len(uncert)} uncertified queries exceed the "
+        f"{round_start.CHECK_WINDOW}-query check window"
+    )

@@ -13,10 +13,14 @@ import os
 
 from pyspark.sql import functions as F
 
+from data_ingestion_task_spark.plans.dedup_plans import (
+    band_rows,
+    hashed_shingles,
+    minhash_sigs,
+)
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.dedup import (
     first_occurrence_fingerprints,
-    minhash_band_keys,
     start_dedup_ingest,
     start_neardup_ingest,
 )
@@ -120,7 +124,8 @@ def test_stream_neardup_gate_replays_batch_band_claims(spark, sf_dir, tmp_path):
 
     # replay the claims from the BATCH band keys in arrival order
     bands: dict[int, list[str]] = {}
-    for r in minhash_band_keys(docs).collect():
+    hsl = docs.select("doc_id", hashed_shingles(F.col("text"), 3).alias("hs"))
+    for r in band_rows(minhash_sigs(hsl)).collect():
         bands.setdefault(r["doc_id"], []).append(r["band_key"])
     claimed: set[str] = set()
     expect = {}

@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.store_dedup import (
     fingerprint_store,
-    start_store_dedup_ingest,
+    start_store_gate_ingest,
     store_admitted,
+    store_gate,
 )
 
 
@@ -41,13 +42,12 @@ def test_store_gate_rejects_reposts_across_batches_and_runs(spark, sf_dir, tmp_p
 
     schema = spark.read.parquet(str(inbox)).schema
     store = fingerprint_store(spark, str(tmp_path / "sd_store"), n_buckets=8)
-    q = start_store_dedup_ingest(
+    q = start_store_gate_ingest(
         spark,
         str(inbox),
         str(tmp_path / "sd_ckpt"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "sd_verdicts"),
+        store_gate(store, str(tmp_path / "sd_verdicts")),
         max_files_per_trigger=1,
         query_name="sd_t1",
     )
@@ -70,13 +70,12 @@ def test_store_gate_rejects_reposts_across_batches_and_runs(spark, sf_dir, tmp_p
     docs.filter(F.col("doc_id") % 3 == 1).withColumn(
         "doc_id", F.col("doc_id") + 2_000_000
     ).write.parquet(str(inbox2))
-    q2 = start_store_dedup_ingest(
+    q2 = start_store_gate_ingest(
         spark,
         str(inbox2),
         str(tmp_path / "sd_ckpt2"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "sd_verdicts2"),
+        store_gate(store, str(tmp_path / "sd_verdicts2")),
         query_name="sd_t2",
     )
     q2.awaitTermination(180)
@@ -94,13 +93,12 @@ def test_store_gate_exactly_once_at_store_grain_across_kill(spark, sf_dir, tmp_p
     schema = spark.read.parquet(str(inbox)).schema
     store = fingerprint_store(spark, str(tmp_path / "sk_store"), n_buckets=8)
     ckpt = str(tmp_path / "sk_ckpt")
-    q1 = start_store_dedup_ingest(
+    q1 = start_store_gate_ingest(
         spark,
         str(inbox),
         ckpt,
         schema,
-        store,
-        verdict_dir=str(tmp_path / "sk_verdicts"),
+        store_gate(store, str(tmp_path / "sk_verdicts")),
         max_files_per_trigger=1,
         query_name="sk_kill",
     )
@@ -111,13 +109,12 @@ def test_store_gate_exactly_once_at_store_grain_across_kill(spark, sf_dir, tmp_p
         time.sleep(0.1)
     q1.stop()
     q1.awaitTermination(60)
-    q2 = start_store_dedup_ingest(
+    q2 = start_store_gate_ingest(
         spark,
         str(inbox),
         ckpt,
         schema,
-        store,
-        verdict_dir=str(tmp_path / "sk_verdicts"),
+        store_gate(store, str(tmp_path / "sk_verdicts")),
         max_files_per_trigger=1,
         query_name="sk_resume",
     )
@@ -153,10 +150,6 @@ def test_dual_gate_horizon_absorbs_store_rejects(spark, sf_dir, tmp_path):
     no-merge evidence). A re-post in a brand-new run (fresh checkpoint
     — RAM state gone) still reaches the store gate and is rejected by
     the durable registry."""
-    from data_ingestion_task_spark.streaming.store_dedup import (
-        start_dual_dedup_ingest,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -172,13 +165,13 @@ def test_dual_gate_horizon_absorbs_store_rejects(spark, sf_dir, tmp_path):
 
     schema = spark.read.parquet(str(inbox)).schema
     store = fingerprint_store(spark, str(tmp_path / "dg_store"), n_buckets=8)
-    q = start_dual_dedup_ingest(
+    q = start_store_gate_ingest(
         spark,
         str(inbox),
         str(tmp_path / "dg_ckpt"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "dg_verdicts"),
+        store_gate(store, str(tmp_path / "dg_verdicts")),
+        watermark="10 minutes",
         max_files_per_trigger=1,
         query_name="dg_t1",
     )
@@ -202,13 +195,13 @@ def test_dual_gate_horizon_absorbs_store_rejects(spark, sf_dir, tmp_path):
     reposts.withColumn("doc_id", F.col("doc_id") + 1_000_000).coalesce(1).write.parquet(
         str(inbox2)
     )
-    q2 = start_dual_dedup_ingest(
+    q2 = start_store_gate_ingest(
         spark,
         str(inbox2),
         str(tmp_path / "dg_ckpt2"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "dg_verdicts2"),
+        store_gate(store, str(tmp_path / "dg_verdicts2")),
+        watermark="10 minutes",
         query_name="dg_t2",
     )
     q2.awaitTermination(240)

@@ -14,9 +14,10 @@ from pyspark.sql import functions as F
 
 from data_ingestion_task_spark.functions.text import words
 from data_ingestion_task_spark.sources.tables import load_table
+from data_ingestion_task_spark.streaming.store_dedup import start_store_gate_ingest
 from data_ingestion_task_spark.streaming.store_neardup import (
     neardup_band_store,
-    start_store_neardup_ingest,
+    neardup_gate,
     store_admitted,
 )
 
@@ -57,13 +58,12 @@ def test_neardup_gate_rejects_reposts_across_batches_and_runs(
 
     schema = spark.read.parquet(str(inbox)).schema
     store = neardup_band_store(spark, str(tmp_path / "nd_store"), n_buckets=8)
-    q = start_store_neardup_ingest(
+    q = start_store_gate_ingest(
         spark,
         str(inbox),
         str(tmp_path / "nd_ckpt"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "nd_verdicts"),
+        neardup_gate(store, str(tmp_path / "nd_verdicts")),
         max_files_per_trigger=1,
         query_name="nd_t1",
     )
@@ -86,13 +86,12 @@ def test_neardup_gate_rejects_reposts_across_batches_and_runs(
     docs.filter(F.col("doc_id") % 3 == 1).withColumn(
         "doc_id", F.col("doc_id") + 2_000_000
     ).write.parquet(str(inbox2))
-    q2 = start_store_neardup_ingest(
+    q2 = start_store_gate_ingest(
         spark,
         str(inbox2),
         str(tmp_path / "nd_ckpt2"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "nd_verdicts2"),
+        neardup_gate(store, str(tmp_path / "nd_verdicts2")),
         query_name="nd_t2",
     )
     q2.awaitTermination(240)
@@ -114,13 +113,12 @@ def test_neardup_gate_exactly_once_at_store_grain_across_kill(
     schema = spark.read.parquet(str(inbox)).schema
     store = neardup_band_store(spark, str(tmp_path / "nk_store"), n_buckets=8)
     ckpt = str(tmp_path / "nk_ckpt")
-    q1 = start_store_neardup_ingest(
+    q1 = start_store_gate_ingest(
         spark,
         str(inbox),
         ckpt,
         schema,
-        store,
-        verdict_dir=str(tmp_path / "nk_verdicts"),
+        neardup_gate(store, str(tmp_path / "nk_verdicts")),
         max_files_per_trigger=1,
         query_name="nk_kill",
     )
@@ -133,13 +131,12 @@ def test_neardup_gate_exactly_once_at_store_grain_across_kill(
         time.sleep(0.1)
     q1.stop()
     q1.awaitTermination(60)
-    q2 = start_store_neardup_ingest(
+    q2 = start_store_gate_ingest(
         spark,
         str(inbox),
         ckpt,
         schema,
-        store,
-        verdict_dir=str(tmp_path / "nk_verdicts"),
+        neardup_gate(store, str(tmp_path / "nk_verdicts")),
         max_files_per_trigger=1,
         query_name="nk_resume",
     )
@@ -152,13 +149,12 @@ def test_neardup_gate_exactly_once_at_store_grain_across_kill(
     # over the same inbox re-judges every doc dup_of_corpus (identical
     # text -> identical bands -> Jaccard 1.0 vs its own stored claim,
     # deterministic) and merges nothing
-    q3 = start_store_neardup_ingest(
+    q3 = start_store_gate_ingest(
         spark,
         str(inbox),
         str(tmp_path / "nk_ckpt3"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "nk_verdicts3"),
+        neardup_gate(store, str(tmp_path / "nk_verdicts3")),
         query_name="nk_replay",
     )
     q3.awaitTermination(240)
@@ -175,10 +171,6 @@ def test_dual_neardup_gate_ram_absorbs_store_convicts(spark, sf_dir, tmp_path):
     never merged); NEAR variants pass the exact stage and are convicted
     by the band registry; a cross-run exact re-post (fresh checkpoint)
     reaches the store gate and is rejected at Jaccard 1.0."""
-    from data_ingestion_task_spark.streaming.store_neardup import (
-        start_dual_neardup_ingest,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -204,13 +196,13 @@ def test_dual_neardup_gate_ram_absorbs_store_convicts(spark, sf_dir, tmp_path):
 
     schema = spark.read.parquet(str(inbox)).schema
     store = neardup_band_store(spark, str(tmp_path / "dn_store"), n_buckets=8)
-    q = start_dual_neardup_ingest(
+    q = start_store_gate_ingest(
         spark,
         str(inbox),
         str(tmp_path / "dn_ckpt"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "dn_verdicts"),
+        neardup_gate(store, str(tmp_path / "dn_verdicts")),
+        watermark="10 minutes",
         max_files_per_trigger=1,
         query_name="dn_t1",
     )
@@ -238,13 +230,13 @@ def test_dual_neardup_gate_ram_absorbs_store_convicts(spark, sf_dir, tmp_path):
     base.filter(F.col("doc_id") % 3 == 1).withColumn(
         "doc_id", F.col("doc_id") + 3_000_000
     ).write.parquet(str(inbox2))
-    q2 = start_dual_neardup_ingest(
+    q2 = start_store_gate_ingest(
         spark,
         str(inbox2),
         str(tmp_path / "dn_ckpt2"),
         schema,
-        store,
-        verdict_dir=str(tmp_path / "dn_verdicts2"),
+        neardup_gate(store, str(tmp_path / "dn_verdicts2")),
+        watermark="10 minutes",
         query_name="dn_t2",
     )
     q2.awaitTermination(240)
