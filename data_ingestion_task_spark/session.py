@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The directory holding the ``data_ingestion_task_spark`` package.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _codegen_cache_entries() -> str:
     """``SPARK_GRAFT_CODEGEN_CACHE`` (default 8192), checked to be a
@@ -69,6 +72,14 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Fork Python workers from the engine's daemon, which stops the
+        # per-task re-read of pyspark.zip (see pyworker.py). Static
+        # conf, like the codegen cache above. Spark starts the daemon
+        # with `python -m`, so the engine must be importable by the
+        # workers whatever the driver's cwd: Spark prepends its own
+        # pyspark paths to this PYTHONPATH and appends the inherited one.
+        .config("spark.python.daemon.module", "data_ingestion_task_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
         # Deterministic timestamp semantics for oracle comparison.
         .config("spark.sql.session.timeZone", "UTC")
         # Quieter local runs; harmless on a cluster.

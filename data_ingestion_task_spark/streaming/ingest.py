@@ -158,9 +158,7 @@ def start_windowed_event_counts(
     sink (complete mode) for inspection; swap for a parquet/Kafka sink
     in production (append mode emits windows as the watermark passes
     them)."""
-    events = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 64).parquet(inbox)
-    )
+    events = document_stream(spark, inbox, schema, max_files_per_trigger=64)
     agg = windowed_event_counts(events, watermark)
     return (
         agg.writeStream.outputMode("complete")
@@ -191,7 +189,7 @@ def start_bounded_deduped_ingest(
     per record ever seen — at 100 TB/day that is the difference
     between GBs and an unbounded store. (Re-deliveries later than the
     horizon pass through; dedupe those at rest with dedup_exact.)"""
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 64).parquet(inbox)
+    stream = document_stream(spark, inbox, schema, max_files_per_trigger=64)
     stream = stream.withColumn(ts_col, _ntz_to_ltz(stream, ts_col)).withWatermark(
         ts_col, horizon
     )

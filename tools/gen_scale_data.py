@@ -37,8 +37,11 @@ import os
 import random
 import sys
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
 SRC = "/root/testdata/sf0.1"
-_SCALE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale")
+_SCALE_ROOT = os.path.join(_REPO, ".scale")
 DST = os.path.join(_SCALE_ROOT, "sf1")
 REPLICAS = 10
 
@@ -84,15 +87,14 @@ def main() -> int:
         print(f"{DST} already built; --force to rebuild")
         return 0
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    from data_ingestion_task_spark.session import get_spark
+
+    spark = get_spark(
+        "gen-scale-data",
+        shuffle_partitions=32,
+        extra_conf={"spark.driver.memory": "24g", "spark.ui.showConsoleProgress": "false"},
     )
     os.makedirs(DST, exist_ok=True)
 

@@ -23,24 +23,19 @@ K = 3
 
 
 def main() -> int:
-    import os
-
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from data_ingestion_task_spark.operators.knn import knn_join_exact
     from data_ingestion_task_spark.plans import registry
     from data_ingestion_task_spark.plans._vector_shared import _split
+    from data_ingestion_task_spark.session import get_spark
 
     registry.load_all()
     dirs = sys.argv[1:] or ["/root/testdata/sf0.1", ".scale/sf3"]
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
+    spark = get_spark(
+        "recall-ab",
+        shuffle_partitions=32,
+        extra_conf={"spark.driver.memory": "48g", "spark.ui.showConsoleProgress": "false"},
     )
     out: dict[str, dict[str, float]] = {}
     for sf_dir in dirs:

@@ -50,8 +50,6 @@ DEFAULT = [
 
 
 def main() -> int:
-    import os
-
     args = [a for a in sys.argv[1:]]
     repeats = 2
     if "--repeats" in args:
@@ -71,18 +69,14 @@ def main() -> int:
     budget = BUDGET_PER_10X * big_scale / 10.0
     names = args or DEFAULT
 
-    from pyspark.sql import SparkSession
-
     from data_ingestion_task_spark.plans import registry
+    from data_ingestion_task_spark.session import get_spark
 
     registry.load_all()
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
+    spark = get_spark(
+        "scale-probe",
+        shuffle_partitions=32,
+        extra_conf={"spark.driver.memory": "48g", "spark.ui.showConsoleProgress": "false"},
     )
     # JVM/codegen warmup so the first measured query doesn't pay it.
     spark.range(1000).selectExpr("sum(id)").collect()
