@@ -465,9 +465,10 @@ def _nearest_centroid(
     xn: DataFrame, cent: DataFrame, id_col: str, cent_mat=None
 ) -> DataFrame:
     """``(id, _xv)`` × broadcast ``(centroid_id, _cv)`` →
-    ``(id, _xv, centroid_id)``: argmax-cosine assignment with
-    centroid_id ASC tie-break, shared by :func:`knn_join_ivf`'s
-    inverted lists and :func:`train_ivf_codebook`'s Lloyd rounds.
+    ``(id, _xv, centroid_id, sim)``: argmax-cosine assignment with
+    centroid_id ASC tie-break (``sim`` is the winning cosine), the one
+    assignment of :func:`knn_join_ivf`'s inverted lists, the IVF-PQ
+    build and every spherical k-means round (:func:`_lloyd`).
 
     Shape rationale, two generations:
 
@@ -515,7 +516,7 @@ def _nearest_centroid(
     cids, cm = cent_mat
     schema = f"{id_col} long, _xv array<double>, centroid_id long"
     if cids.size == 0:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], schema + ", sim double")
     bc = spark.sparkContext.broadcast((cids, cm))
     margin = 1e-6
 
@@ -552,7 +553,12 @@ def _nearest_centroid(
         )
         .groupBy(id_col)
         .agg(F.first("_xv").alias("_xv"), F.max("_s").alias("_best"))
-        .select(id_col, "_xv", (-F.col("_best.neg_centroid")).alias("centroid_id"))
+        .select(
+            id_col,
+            "_xv",
+            (-F.col("_best.neg_centroid")).alias("centroid_id"),
+            F.col("_best.sim").alias("sim"),
+        )
     )
 
 
@@ -654,6 +660,58 @@ def _probe_cells(
     )
 
 
+def _spherical_means(assigned: DataFrame) -> DataFrame:
+    """Lloyd recompute: ``(centroid_id, _xv)`` members →
+    ``(centroid_id, _cv)``, each centroid the renormalized mean of its
+    members. Component sums go through round-9dp → DECIMAL(12,9), so
+    the result is bit-reproducible across partitionings and equal to
+    the DuckDB twin (``vector_plans._d_km_recompute``): plain double
+    sums in a hash aggregate are order-dependent in the last ulp. A
+    centroid with no members does not appear."""
+    means = (
+        assigned.select("centroid_id", F.posexplode("_xv").alias("pos", "val"))
+        .groupBy("centroid_id", "pos")
+        .agg(
+            F.sum(F.round(F.col("val"), 9).cast("decimal(12,9)")).alias("s"),
+            F.count("*").alias("c"),
+        )
+        .groupBy("centroid_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        "pos",
+                        (F.col("s").cast("double") / F.col("c")).alias("m"),
+                    )
+                )
+            ).alias("_pm")
+        )
+        .select("centroid_id", F.col("_pm").getField("m").alias("_m"))
+    )
+    norm = F.sqrt(F.aggregate(F.col("_m"), F.lit(0.0), lambda a, v: a + v * v))
+    return means.select("centroid_id", "_m", norm.alias("_n")).select(
+        "centroid_id",
+        F.transform(F.col("_m"), lambda v: v / F.col("_n")).alias("_cv"),
+    )
+
+
+def _lloyd(
+    xn: DataFrame, cent: DataFrame, id_col: str, rounds: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Spherical k-means from seed centroids ``(centroid_id, _cv)``
+    over unit rows ``(id, _xv)``: ``rounds`` Lloyd iterations of
+    :func:`_nearest_centroid` then :func:`_spherical_means`. Returns
+    the final centroids and the per-round centroid frames, persisted
+    because each round's assignment collects its centroids (without
+    the persist every collect would re-run all earlier rounds); the
+    caller unpersists them."""
+    deps: list[DataFrame] = []
+    for _ in range(rounds):
+        cent = _spherical_means(_nearest_centroid(xn, cent, id_col)).persist()
+        deps.append(cent)
+    return cent, deps
+
+
 def train_ivf_codebook(
     index_df: DataFrame,
     index_id: str = "neighbor_id",
@@ -663,8 +721,9 @@ def train_ivf_codebook(
 ) -> DataFrame:
     """Spherical k-means training for :func:`knn_join_ivf`'s codebook —
     the ``IndexIVFFlat.train()`` step: seeds = index ids ≡ 1 mod
-    ``seed_mod``, then ``rounds`` Lloyd iterations (assign each vector
-    to its argmax-cosine centroid, recompute each centroid as the
+    ``seed_mod``, then ``rounds`` Lloyd iterations (:func:`_lloyd`:
+    assign each vector to its argmax-cosine centroid, ties to the
+    lowest centroid_id; recompute each centroid as the DECIMAL-quantized
     renormalized mean of its members). Returns ``(centroid_id,
     <vec_col>)`` ready for ``knn_join_ivf(codebook=...)``. A centroid
     whose cluster goes empty in a round DROPS OUT (the returned nlist
@@ -673,76 +732,26 @@ def train_ivf_codebook(
     empties identically); seed more centroids if an exact nlist
     matters.
 
-    Scale: per round, assignment is a broadcast-codebook join reduced
-    by a map-side-combined aggregate (the exchange carries one row per
-    index vector) and the recompute is a posexplode →
-    (centroid, dim)-ary hash-agg — both linear in the training set.
-    Run on a SAMPLE with ``nlist ≈ √N`` seeds in production. The
-    assignment is the plain JVM broadcast-expansion argmax (identical
-    semantics to :func:`_nearest_centroid`: exact JVM dot, ties to the
-    lowest centroid_id), NOT the BLAS-prefiltered helper: the input is
-    sample-bounded by contract (≤ sample·nlist JVM dots per round,
-    trivial), and the helper's per-round driver collect would both pay
-    an Arrow exchange and — because each round's centroids are an
-    unpersisted intermediate — re-execute every earlier round's
-    lineage once per collect (measured ~2× on the registered trained
-    query's coarse stage at sf0.1). Keeping the chain collect-free
-    makes the whole ``rounds``-deep training plan ONE lazy job,
-    evaluated exactly once by the caller's first action. Centroid
-    component sums go through
-    round-9dp → DECIMAL(12,9) (the same quantization as the registered
-    ``ivf_kmeans_refine`` twin), so the trained codebook is
-    bit-reproducible across partitionings/cluster sizes — plain double
-    sums in a hash aggregate are order-dependent in the last ulp,
-    which would make "train once, reuse everywhere" silently
-    layout-sensitive."""
-    xn = normalize_embeddings(index_df, vec_col).select(
-        F.col(index_id).alias("_id"), F.col(vec_col).alias("_xv")
+    Scale: per round, one BLAS matmul sweep of the training set against
+    the nlist centroids, an exact re-score of the ~1 surviving
+    candidate per row, and a (centroid, dim)-ary decimal recompute —
+    all linear in the training set. Run on a SAMPLE with ``nlist ≈ √N``
+    seeds in production. The persisted frames ride out on
+    ``_cached_deps`` as ``[normalized input, round 1, …, round
+    rounds]`` — the last is the codebook's own cache; release via
+    ``api.release`` after materializing the result."""
+    xn = (
+        normalize_embeddings(index_df, vec_col)
+        .select(F.col(index_id).alias("_id"), F.col(vec_col).alias("_xv"))
+        .persist()  # swept once per round
     )
-    cent = xn.filter(F.col("_id") % seed_mod == 1).select(
+    seeds = xn.filter(F.col("_id") % seed_mod == 1).select(
         F.col("_id").alias("centroid_id"), F.col("_xv").alias("_cv")
     )
-    for _ in range(rounds):
-        assigned = (
-            xn.join(F.broadcast(cent), F.lit(True))
-            .select(
-                "_id",
-                "_xv",
-                F.struct(
-                    dot(F.col("_xv"), F.col("_cv")).alias("sim"),
-                    (-F.col("centroid_id")).alias("neg_centroid"),
-                ).alias("_s"),
-            )
-            .groupBy("_id")
-            .agg(F.first("_xv").alias("_xv"), F.max("_s").alias("_best"))
-            .select("_xv", (-F.col("_best.neg_centroid")).alias("centroid_id"))
-        )
-        means = (
-            assigned.select("centroid_id", F.posexplode("_xv").alias("pos", "val"))
-            .groupBy("centroid_id", "pos")
-            .agg(
-                F.sum(F.round(F.col("val"), 9).cast("decimal(12,9)")).alias("s"),
-                F.count("*").alias("c"),
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            "pos",
-                            (F.col("s").cast("double") / F.col("c")).alias("m"),
-                        )
-                    )
-                ).alias("_pm")
-            )
-            .select("centroid_id", F.col("_pm").getField("m").alias("_m"))
-        )
-        norm = F.sqrt(F.aggregate(F.col("_m"), F.lit(0.0), lambda a, v: a + v * v))
-        cent = means.select("centroid_id", "_m", norm.alias("_n")).select(
-            "centroid_id",
-            F.transform(F.col("_m"), lambda v: v / F.col("_n")).alias("_cv"),
-        )
-    return cent.select("centroid_id", F.col("_cv").alias(vec_col))
+    cent, deps = _lloyd(xn, seeds, "_id", rounds)
+    out = cent.select("centroid_id", F.col("_cv").alias(vec_col))
+    out._cached_deps = [xn, *deps]
+    return out
 
 
 def knn_join_ivf(

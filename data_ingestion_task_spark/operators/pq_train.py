@@ -12,7 +12,7 @@ quantized round-9dp → DECIMAL(12,9) — the proven order-independent
 idiom of ``knn.train_ivf_codebook`` / the registered
 ``ivf_kmeans_refine`` twin — so the trained codebooks are identical
 whatever the cluster layout, and a static SQL twin
-(``plans/ivfpq_trained_plans.py``) reconstructs them exactly.
+(``plans/ivfpq_plans.py``) reconstructs them exactly.
 
 Reference analogue: FAISS ``ProductQuantizer.train()`` — the training
 step behind ``IndexIVFPQ`` that the reference's flat index

@@ -249,8 +249,6 @@ def load_all() -> None:
         extract_plans,
         interval_plans,
         ivfpq_plans,
-        ivfpq_scaled_plans,
-        ivfpq_trained_plans,
         lm_plans,
         ml_plans,
         multimodal_plans,

@@ -14,16 +14,25 @@ scores are rounded to 9 dp at the output edge only.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from math import isqrt
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.text import hash64
 from ..functions.vectors import dot, ip_to_unit, l2_distance
 from ..operators.knn import (
+    _collect_centroids,
+    _lloyd,
+    _nearest_centroid,
+    _probe_cells,
     hyperplane,
     knn_join_exact,
     knn_join_lsh,
     knn_topk,
+    lsh_signature,
     normalize_embeddings,
 )
 from ..sources.tables import load_table
@@ -408,6 +417,92 @@ _RECALL_K = 3
 _RECALL_SAMPLE_MOD = 50
 
 
+def _rank_by_sim(pairs: DataFrame) -> DataFrame:
+    """``(query_id, neighbor_id, sim)`` candidates → ``(query_id,
+    neighbor_id, rnk)``, ranked per query by sim DESC, neighbor_id ASC."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return pairs.select("query_id", "neighbor_id", F.row_number().over(w).alias("rnk"))
+
+
+def _recall_audit(
+    spark: SparkSession,
+    sf_dir: str,
+    sample_mod: int,
+    audit: str,
+    knob: str,
+    count_col: str,
+    branches: Callable[
+        [DataFrame, DataFrame], tuple[dict[int, DataFrame], list[DataFrame]]
+    ],
+) -> DataFrame:
+    """The recall/cost table of every recall audit: one row per knob
+    value with ``n_queries``, the branch's rows per sampled query
+    (``count_col``) and recall@{_RECALL_K} against the exact broadcast
+    search, over the deterministic 1-in-``sample_mod`` query sample.
+
+    ``branches(q, x)`` receives the sampled queries ``(query_id,
+    embedding)`` and the index ``(neighbor_id, embedding)`` and
+    returns each knob value's ``(query_id, neighbor_id, rnk)`` frame,
+    plus the frames it persisted (released here). Every branch is
+    tagged with its knob value and unioned, so ONE aggregate action
+    evaluates the whole sweep and the branch stages schedule
+    concurrently inside it (r4: ~30% faster than an action per
+    branch). The denominator is every sampled query, so a query no
+    branch row reaches counts as recall 0 and silent misses stay
+    visible."""
+    q, x = _split(spark, sf_dir)
+    q = q.filter(F.col("query_id") % sample_mod == 0).select("query_id", "embedding")
+    x = x.select("neighbor_id", "embedding")
+    n_queries = q.count()
+    if n_queries == 0:
+        # Raised before anything is persisted or the exact search runs,
+        # so the error path neither leaks a cached frame nor pays for it.
+        raise ValueError(
+            f"{audit}: query sample is empty (sample_mod={sample_mod} "
+            "selected 0 of the query ids); lower sample_mod for corpora "
+            "this small"
+        )
+    exact = (
+        knn_join_exact(x, q, k=_RECALL_K)
+        .select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
+        .persist()  # joined by every branch of the one aggregate job
+    )
+    exact.count()
+    frames, cached = branches(q, x)
+    try:
+        union = None
+        for value, frame in frames.items():
+            tagged = (
+                frame.select("query_id", "neighbor_id", "rnk")
+                .join(exact, ["query_id", "neighbor_id"], "left")
+                .withColumn(knob, F.lit(value))
+            )
+            union = tagged if union is None else union.unionByName(tagged)
+        hit = (F.col("rnk") <= _RECALL_K) & F.col("_hit").isNotNull()
+        stats = {
+            r[knob]: r
+            for r in union.groupBy(knob)
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.when(hit, 1).otherwise(0)).alias("hits"),
+            )
+            .collect()
+        }
+    finally:
+        for df in (exact, *cached):
+            df.unpersist()
+    rows = []
+    for value in frames:
+        r = stats.get(value)
+        n, hits = (r["n"], r["hits"]) if r is not None else (0, 0)
+        rows.append((value, n_queries, n / n_queries, hits / (_RECALL_K * n_queries)))
+    return spark.createDataFrame(
+        rows,
+        f"{knob} bigint, n_queries bigint, {count_col} double, "
+        f"recall_at_{_RECALL_K} double",
+    ).orderBy(knob)
+
+
 def _d_recall_branch(bits: int) -> str:
     """One n_bits setting of the recall audit as a DuckDB SELECT."""
     return f"""
@@ -473,90 +568,32 @@ def ann_recall_audit(
     what bucketing exploits; the point of this query is the MECHANISM
     (the recall/candidates tradeoff measured per setting), which is
     data-independent."""
-    from pyspark.sql.window import Window
 
-    from ..operators.knn import lsh_signature
-
-    q, x = _split(spark, sf_dir)
-    # Audit on a deterministic 1-in-50 query sample (vec_id % 50): a
-    # recall estimate needs a sample, not the census — the full-corpus
-    # exact pass is exactly the cost ANN exists to avoid. (r3 shipped
-    # 1-in-25 with a docstring claiming 1-in-5; both fixed per VERDICT,
-    # and the sample halved to cap the audit's bench cost.)
-    q = q.filter(F.col("query_id") % sample_mod == 0)
-    # Persist the shared exact pass: both LSH branches join against it
-    # (two count() actions each) — unpersisted, the full brute-force
-    # plan would re-execute per action.
-    exact = (
-        knn_join_exact(
-            x.select("neighbor_id", "embedding"),
-            q.select("query_id", "embedding"),
-            k=_RECALL_K,
-        )
-        .select("query_id", "neighbor_id")
-        .persist()
-    )
-    exact.count()
-    n_queries = q.count()
-    # ONE plan for every LSH width: per-branch (bucket-join → rank →
-    # exact-hit join) subtrees tagged with an n_bits literal, unioned,
-    # then a single groupBy(n_bits) agg — one action instead of one
-    # per branch, and the independent branch stages schedule
-    # concurrently inside that one job (r4: cut the audit ~30% vs the
-    # action-per-branch loop it replaces).
-    branch_frames = []
-    for bits in _RECALL_BITS:
-        sig_q = normalize_embeddings(q.select("query_id", "embedding")).select(
-            "query_id",
-            F.col("embedding").alias("_qv"),
-            lsh_signature(F.col("embedding"), bits, DIM).alias("bucket"),
-        )
-        sig_x = normalize_embeddings(x.select("neighbor_id", "embedding")).select(
-            "neighbor_id",
-            F.col("embedding").alias("_xv"),
-            lsh_signature(F.col("embedding"), bits, DIM).alias("bucket"),
-        )
-        pairs = sig_q.join(sig_x, "bucket").select(
-            "query_id", "neighbor_id", dot(F.col("_qv"), F.col("_xv")).alias("sim")
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        ranked = pairs.withColumn("rnk", F.row_number().over(w))
-        joined = ranked.join(
-            exact.withColumn("_hit", F.lit(1)), ["query_id", "neighbor_id"], "left"
-        )
-        branch_frames.append(joined.withColumn("n_bits", F.lit(bits)))
-    union = branch_frames[0]
-    for bf in branch_frames[1:]:
-        union = union.unionByName(bf)
-    stats = (
-        union.groupBy("n_bits")
-        .agg(
-            F.count("*").alias("n_cand"),
-            F.sum(
-                F.when((F.col("rnk") <= _RECALL_K) & F.col("_hit").isNotNull(), 1).otherwise(0)
-            ).alias("hits"),
-        )
-        .collect()
-    )
-    by_bits = {r["n_bits"]: r for r in stats}
-    rows = []
-    for bits in _RECALL_BITS:
-        r = by_bits.get(bits)
-        n_cand = r["n_cand"] if r is not None else 0
-        hits = r["hits"] if r is not None else 0
-        rows.append(
-            (
-                bits,
-                n_queries,
-                float(n_cand) / n_queries,
-                float(hits) / (_RECALL_K * n_queries),
+    def branches(q: DataFrame, x: DataFrame):
+        frames = {}
+        for bits in _RECALL_BITS:
+            sig_q = normalize_embeddings(q).select(
+                "query_id",
+                F.col("embedding").alias("_qv"),
+                lsh_signature(F.col("embedding"), bits, DIM).alias("bucket"),
             )
-        )
-    exact.unpersist()  # result rows are already on the driver
-    return (
-        q.sparkSession.createDataFrame(
-            rows, f"n_bits bigint, n_queries bigint, avg_candidates double, recall_at_{_RECALL_K} double"
-        ).orderBy("n_bits")
+            sig_x = normalize_embeddings(x).select(
+                "neighbor_id",
+                F.col("embedding").alias("_xv"),
+                lsh_signature(F.col("embedding"), bits, DIM).alias("bucket"),
+            )
+            frames[bits] = _rank_by_sim(
+                sig_q.join(sig_x, "bucket").select(
+                    "query_id", "neighbor_id", dot(F.col("_qv"), F.col("_xv")).alias("sim")
+                )
+            )
+        return frames, []
+
+    # Deterministic 1-in-sample_mod query sample (vec_id % 50): a recall
+    # estimate needs a sample, not the census — the full-corpus exact
+    # pass is exactly the cost ANN exists to avoid.
+    return _recall_audit(
+        spark, sf_dir, sample_mod, "ann_recall_audit", "n_bits", "avg_candidates", branches
     )
 
 
@@ -727,8 +764,8 @@ def ivf_recall_audit(
     two tables are directly comparable. Shared-once stages: the exact
     pass, the centroid codebook, the inverted-list assignment, and the
     full probe ranking (each branch only filters prn <= n_probe) —
-    then every branch is tagged and unioned into ONE aggregate action,
-    the same single-job shape as ann_recall_audit.
+    then :func:`_recall_audit` evaluates every branch in ONE aggregate
+    action, as for the other two audits.
 
     ``cent_mod`` scales with the index so nlist ≈ √N — the same rule
     (and the same DuckDB exact-isqrt oracle idiom) as
@@ -738,99 +775,41 @@ def ivf_recall_audit(
     it at 55.4× (278 s) — assignment and probe selection are N×nlist
     expansions, so nlist ∝ N makes them quadratic. Re-probed 5.2×
     (33.4 s) with the √N rule; the floor stays ``_IVF_AUDIT_MOD``."""
-    from math import isqrt
 
-    from pyspark.sql.window import Window
-
-    q, x = _split(spark, sf_dir)
-    q = q.filter(F.col("query_id") % sample_mod == 0)
-    n_index = x.count()
-    cent_mod = max(_IVF_AUDIT_MOD, n_index // isqrt(n_index)) if n_index else _IVF_AUDIT_MOD
-    exact = (
-        knn_join_exact(
-            x.select("neighbor_id", "embedding"),
-            q.select("query_id", "embedding"),
-            k=_RECALL_K,
+    def branches(q: DataFrame, x: DataFrame):
+        n_index = x.count()
+        cent_mod = (
+            max(_IVF_AUDIT_MOD, n_index // isqrt(n_index)) if n_index else _IVF_AUDIT_MOD
         )
-        .select("query_id", "neighbor_id")
-        .persist()
-    )
-    exact.count()
-    n_queries = q.count()
-
-    qn = normalize_embeddings(q.select("query_id", "embedding")).select(
-        "query_id", F.col("embedding").alias("_qv")
-    )
-    xn = normalize_embeddings(x.select("neighbor_id", "embedding")).select(
-        "neighbor_id", F.col("embedding").alias("_xv")
-    )
-    cent = xn.filter(F.col("neighbor_id") % cent_mod == 1).select(
-        F.col("neighbor_id").alias("centroid_id"), F.col("_xv").alias("_cv")
-    )
-    # Assignment and probe ranking via the shared BLAS-prefiltered
-    # helpers (operators/knn.py — one matmul per Arrow batch, lossless
-    # 1e-6 margin, exact JVM re-score: bit-identical to the previous
-    # inline broadcast-expansion shapes, which evaluated the full
-    # N×nlist JVM dot product). One centroid collect feeds both.
-    from ..operators.knn import _collect_centroids, _nearest_centroid, _probe_cells
-
-    cent_mat = _collect_centroids(cent)
-    # Referenced by every n_probe branch of the union — persist so the
-    # assignment runs once, not once per branch.
-    inverted = _nearest_centroid(xn, cent, "neighbor_id", cent_mat=cent_mat).persist()
-    max_probe = max(_IVF_AUDIT_PROBES)
-    probes = _probe_cells(
-        qn, cent, "query_id", max_probe, cent_mat=cent_mat, emit_rank=True
-    )
-
-    branch_frames = []
-    for p in _IVF_AUDIT_PROBES:
-        pairs = (
-            probes.filter(F.col("prn") <= p)
-            .select("query_id", "_qv", "centroid_id")
-            .join(inverted, "centroid_id")
-            .select("query_id", "neighbor_id", dot(F.col("_qv"), F.col("_xv")).alias("sim"))
+        qn = normalize_embeddings(q).select("query_id", F.col("embedding").alias("_qv"))
+        xn = normalize_embeddings(x).select("neighbor_id", F.col("embedding").alias("_xv"))
+        cent = xn.filter(F.col("neighbor_id") % cent_mod == 1).select(
+            F.col("neighbor_id").alias("centroid_id"), F.col("_xv").alias("_cv")
         )
-        w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        ranked = pairs.withColumn("rnk", F.row_number().over(w))
-        joined = ranked.join(
-            exact.withColumn("_hit", F.lit(1)), ["query_id", "neighbor_id"], "left"
+        # One centroid collect feeds the shared BLAS-prefiltered
+        # assignment and probe ranking (operators/knn.py).
+        cent_mat = _collect_centroids(cent)
+        # Referenced by every n_probe branch of the union — persist so the
+        # assignment runs once, not once per branch.
+        inverted = _nearest_centroid(xn, cent, "neighbor_id", cent_mat=cent_mat).persist()
+        probes = _probe_cells(
+            qn, cent, "query_id", max(_IVF_AUDIT_PROBES), cent_mat=cent_mat, emit_rank=True
         )
-        branch_frames.append(joined.withColumn("n_probe", F.lit(p)))
-    union = branch_frames[0]
-    for bf in branch_frames[1:]:
-        union = union.unionByName(bf)
-    stats = (
-        union.groupBy("n_probe")
-        .agg(
-            F.count("*").alias("n_cand"),
-            F.sum(
-                F.when((F.col("rnk") <= _RECALL_K) & F.col("_hit").isNotNull(), 1).otherwise(0)
-            ).alias("hits"),
-        )
-        .collect()
-    )
-    by_probe = {r["n_probe"]: r for r in stats}
-    rows = []
-    for p in _IVF_AUDIT_PROBES:
-        r = by_probe.get(p)
-        n_cand = r["n_cand"] if r is not None else 0
-        hits = r["hits"] if r is not None else 0
-        rows.append(
-            (
-                p,
-                n_queries,
-                float(n_cand) / n_queries,
-                float(hits) / (_RECALL_K * n_queries),
+        frames = {
+            p: _rank_by_sim(
+                probes.filter(F.col("prn") <= p)
+                .select("query_id", "_qv", "centroid_id")
+                .join(inverted, "centroid_id")
+                .select(
+                    "query_id", "neighbor_id", dot(F.col("_qv"), F.col("_xv")).alias("sim")
+                )
             )
-        )
-    exact.unpersist()
-    inverted.unpersist()
-    return (
-        q.sparkSession.createDataFrame(
-            rows,
-            f"n_probe bigint, n_queries bigint, avg_candidates double, recall_at_{_RECALL_K} double",
-        ).orderBy("n_probe")
+            for p in _IVF_AUDIT_PROBES
+        }
+        return frames, [inverted]
+
+    return _recall_audit(
+        spark, sf_dir, sample_mod, "ivf_recall_audit", "n_probe", "avg_candidates", branches
     )
 
 
@@ -930,12 +909,15 @@ def ivf_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     nlist ∝ N (assignment work ~N², 7.8× at 10× data); now training
     cost is O(sample · nlist) = O(1) in N and the only full-data pass
     is the final broadcast-codebook assignment — linear in N with a
-    fixed ≤√{_KM_SAMPLE}·dim codebook. Each assignment is a broadcast
-    join + one map-side-combined max(struct) aggregate (no shuffle of
-    the product); each recompute is a posexplode → (centroid, dim)-ary
-    hash-agg over sample rows only. The one driver action is a count()
-    of the persisted ≤{_KM_SAMPLE}-row sample (bounded, SCALE.md §6).
-    Cross-engine parity: component sums and sim sums go through
+    fixed ≤√{_KM_SAMPLE}·dim codebook. Training and the final pass
+    share the engine's one spherical k-means (``operators/knn._lloyd``
+    over ``_nearest_centroid``: a BLAS prefilter, an exact JVM
+    re-score and one map-side-combined max(struct) aggregate, no
+    shuffle of the product); each recompute is a posexplode →
+    (centroid, dim)-ary hash-agg over sample rows only. The driver
+    actions are bounded (SCALE.md §6): a count() of the persisted
+    ≤{_KM_SAMPLE}-row sample and one ≤nlist-row centroid collect per
+    assignment. Cross-engine parity: component sums and sim sums go through
     DECIMAL(12,9) (order-independent), and the renormalization is a
     sequential HOF reduction in both engines, so the refined codebook —
     and therefore every assignment — is bit-identical to the DuckDB
@@ -959,66 +941,13 @@ def ivf_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()  # scanned once per Lloyd round
     )
     nlist = math.isqrt(smp.count())  # bounded action: ≤ _KM_SAMPLE rows
-
-    def assign(x: DataFrame, cent: DataFrame) -> DataFrame:
-        return (
-            x.join(F.broadcast(cent), F.lit(True))
-            .select(
-                "neighbor_id",
-                "_xv",
-                F.struct(
-                    dot(F.col("_xv"), F.col("_cv")).alias("sim"),
-                    (-F.col("centroid_id")).alias("neg_centroid"),
-                ).alias("_s"),
-            )
-            .groupBy("neighbor_id")
-            .agg(F.first("_xv").alias("_xv"), F.max("_s").alias("_best"))
-            .select(
-                "neighbor_id",
-                "_xv",
-                (-F.col("_best.neg_centroid")).alias("centroid_id"),
-                F.col("_best.sim").alias("sim"),
-            )
-        )
-
-    def recompute(assigned: DataFrame) -> DataFrame:
-        comp = (
-            assigned.select("centroid_id", F.posexplode("_xv").alias("pos", "val"))
-            .groupBy("centroid_id", "pos")
-            .agg(
-                F.sum(F.round(F.col("val"), 9).cast("decimal(12,9)")).alias("s"),
-                F.count("*").alias("c"),
-            )
-        )
-        means = comp.groupBy("centroid_id").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "pos", (F.col("s").cast("double") / F.col("c")).alias("m")
-                    )
-                )
-            ).alias("_pm")
-        )
-        norm = F.sqrt(
-            F.aggregate(F.col("_m"), F.lit(0.0), lambda acc, v: acc + v * v)
-        )
-        return (
-            means.select("centroid_id", F.col("_pm").getField("m").alias("_m"))
-            .select("centroid_id", "_m", norm.alias("_n"))
-            .select(
-                "centroid_id",
-                F.transform(F.col("_m"), lambda v: v / F.col("_n")).alias("_cv"),
-            )
-        )
-
-    cent = (
+    seeds = (
         smp.orderBy(h.asc(), F.col("neighbor_id").asc())
         .limit(nlist)
         .select(F.col("neighbor_id").alias("centroid_id"), F.col("_xv").alias("_cv"))
     )
-    for _ in range(_KM_ROUNDS):
-        cent = recompute(assign(smp, cent))
-    final = assign(xn, cent)
+    cent, rounds = _lloyd(smp, seeds, "neighbor_id", _KM_ROUNDS)
+    final = _nearest_centroid(xn, cent, "neighbor_id")
     result = (
         final.groupBy("centroid_id")
         .agg(
@@ -1034,5 +963,5 @@ def ivf_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("centroid_id")
     )
-    result._cached_deps = [xn, smp]  # library callers: unpersist when done
+    result._cached_deps = [xn, smp, *rounds]  # library callers: unpersist when done
     return result

@@ -59,10 +59,15 @@ def patch_zipimporter() -> bool:
 
 
 if __name__ == "__main__":
+    import importlib
+
     # Patch through the module's own name, so forked workers can tell
     # which daemon they came from.
     from data_ingestion_task_spark.pyworker import patch_zipimporter as _patch
     from pyspark.daemon import manager
 
     _patch()
+    # Stamp the daemon's own importers before it forks: each worker
+    # inherits them, so its first task does not re-read the archives.
+    importlib.invalidate_caches()
     manager()

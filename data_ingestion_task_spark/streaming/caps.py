@@ -45,6 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from .ingest import document_stream
+
 _OUT_SCHEMA = "doc_id long, cap_key string, ts_ms long, admitted boolean"
 _STATE_SCHEMA = "n_admitted int, last_ts_ms long"
 
@@ -168,11 +170,7 @@ def start_capped_ingest(
     the backlog and stops (the test run mode); tests pass
     ``max_files_per_trigger=1`` to force the cross-batch counter
     path."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(inbox)
-    )
+    stream = document_stream(spark, inbox, schema, max_files_per_trigger)
     return (
         quota_verdicts(stream, key_col, cap, horizon_s=horizon_s)
         .writeStream.format("parquet")

@@ -55,6 +55,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..sources.upsert import KeyedParquetStore
+from .ingest import document_stream
 
 #: Composite MERGE key: one store row per (window_start, event_type).
 ROLLUP_KEY = "rollup_key"
@@ -112,11 +113,7 @@ def start_rollup_maintenance(
     into ``store``. ``availableNow`` drains the backlog and stops (the
     test run mode); production drops the trigger. Read the maintained
     rollup back with :func:`read_rollup`."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(inbox)
-    )
+    stream = document_stream(spark, inbox, schema, max_files_per_trigger)
 
     def _with_key(df: DataFrame) -> DataFrame:
         return df.withColumn(

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from .ingest import document_stream
+
 SESSION_GAP_S = 1800  # 30 min, same constant as the batch twin
 
 _OUT_SCHEMA = "user_id long, n_sessions long, n_events long, last_ts long"
@@ -99,9 +101,7 @@ def start_stateful_sessions(
     ``maxFilesPerTrigger=1`` forces one micro-batch per dropped file so
     the cross-batch state path is actually exercised; production would
     raise it and point the sink at a keyed upsert store."""
-    events = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(inbox)
-    )
+    events = document_stream(spark, inbox, schema, max_files_per_trigger=1)
     out = stateful_user_sessions(events)
     return (
         out.writeStream.outputMode("update")

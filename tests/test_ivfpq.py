@@ -205,21 +205,27 @@ def test_broadcast_queries_keeps_id_types(spark, sf_dir):
 
 def test_recall_audit_empty_sample_raises(spark, sf_dir, monkeypatch):
     """A corpus whose query sample comes up empty must raise a named
-    error, not ZeroDivisionError (ADVICE r7 #4). id 0 always survives
-    `query_id % sample_mod == 0`, so emptiness is reached the way a
-    real tiny corpus would reach it: a query side with no sampled ids
-    (patched _split)."""
+    error, not ZeroDivisionError (ADVICE r7 #4), from every recall
+    audit. id 0 always survives `query_id % sample_mod == 0`, so
+    emptiness is reached the way a real tiny corpus would reach it: a
+    query side with no sampled ids (patched _split of the shared audit
+    driver)."""
     import pytest
     from pyspark.sql import functions as F
 
-    from data_ingestion_task_spark.plans import ivfpq_plans
+    from data_ingestion_task_spark.plans import ivfpq_plans, vector_plans
 
-    real = ivfpq_plans._split
+    real = vector_plans._split
 
     def no_zero_split(spark_, sf_dir_):
         q, x = real(spark_, sf_dir_)
         return q.filter(F.col("query_id") > 0), x
 
-    monkeypatch.setattr(ivfpq_plans, "_split", no_zero_split)
-    with pytest.raises(ValueError, match="query sample is empty"):
-        ivfpq_plans.ivfpq_recall_audit(spark, sf_dir, sample_mod=10_000_000)
+    monkeypatch.setattr(vector_plans, "_split", no_zero_split)
+    for audit in (
+        vector_plans.ann_recall_audit,
+        vector_plans.ivf_recall_audit,
+        ivfpq_plans.ivfpq_recall_audit,
+    ):
+        with pytest.raises(ValueError, match=f"{audit.__name__}: query sample is empty"):
+            audit(spark, sf_dir, sample_mod=10_000_000)

@@ -101,18 +101,14 @@ def test_train_ivf_codebook_partitioning_invariant(spark, sf_dir):
     last ulp with partition layout."""
     from pyspark.sql import functions as F
 
+    from data_ingestion_task_spark import api
     from data_ingestion_task_spark.operators.knn import train_ivf_codebook
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     x = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    a = (
-        train_ivf_codebook(x.repartition(1), seed_mod=25, rounds=2)
-        .orderBy("centroid_id")
-        .collect()
-    )
-    b = (
-        train_ivf_codebook(x.repartition(13), seed_mod=25, rounds=2)
-        .orderBy("centroid_id")
-        .collect()
-    )
-    assert a == b
+    books = []
+    for layout in (x.repartition(1), x.repartition(13)):
+        cb = train_ivf_codebook(layout, seed_mod=25, rounds=2)
+        books.append(cb.orderBy("centroid_id").collect())
+        api.release(cb)
+    assert books[0] == books[1]

@@ -63,7 +63,7 @@ def test_trained_books_reject_small_sample(spark, sf_dir):
 def test_trained_query_contract(spark, sf_dir):
     """ivfpq_trained_topk returns the knn contract: ≤k rows per query,
     rank 1..k dense, sims descending true cosines."""
-    from data_ingestion_task_spark.plans.ivfpq_trained_plans import (
+    from data_ingestion_task_spark.plans.ivfpq_plans import (
         ivfpq_trained_topk,
     )
 
@@ -123,7 +123,7 @@ def test_trained_query_release_contract(spark, sf_dir):
     api.release on the result must return the session's persistent-RDD
     count to baseline (the repo caching contract)."""
     from data_ingestion_task_spark import api
-    from data_ingestion_task_spark.plans.ivfpq_trained_plans import (
+    from data_ingestion_task_spark.plans.ivfpq_plans import (
         ivfpq_trained_topk,
     )
 
@@ -172,7 +172,7 @@ def test_scaled_n_probe_rule_matches_oracle_expr():
     subquery for every nlist the lifecycle can produce."""
     import duckdb
 
-    from data_ingestion_task_spark.plans.ivfpq_scaled_plans import (
+    from data_ingestion_task_spark.plans.ivfpq_plans import (
         _PROBE_DIV,
         scaled_n_probe,
     )
@@ -192,7 +192,7 @@ def test_sample_shuffle_partitions_scale_rule():
     """The trainer-stage shuffle width is derived from sample BYTES
     (guide §2.2) — 1 partition at the registered pins, growing with
     the corpus-tracking cap, never zero."""
-    from data_ingestion_task_spark.plans.ivfpq_trained_plans import (
+    from data_ingestion_task_spark.plans.ivfpq_plans import (
         _sample_shuffle_partitions,
     )
 
@@ -211,7 +211,7 @@ def test_trained_lifecycle_restores_shuffle_width(spark, sf_dir):
     session run at the session width) — including the pre-existing
     session value, whatever it is."""
     from data_ingestion_task_spark import api
-    from data_ingestion_task_spark.plans.ivfpq_trained_plans import (
+    from data_ingestion_task_spark.plans.ivfpq_plans import (
         ivfpq_trained_topk,
     )
 

@@ -6,6 +6,7 @@ starts when the driver runs outside the repo."""
 
 from __future__ import annotations
 
+import importlib
 import importlib.util
 import os
 import subprocess
@@ -101,6 +102,28 @@ def test_deleted_archive_falls_through_to_the_original(tmp_path, patched, direct
     assert len(directory_reads) == reads + 2
     assert importer._files == {}
     assert importer.find_spec("first") is None
+
+
+@needs_patch
+def test_one_priming_call_stamps_every_path_importer(tmp_path, monkeypatch, patched, directory_reads):
+    """The daemon calls ``importlib.invalidate_caches()`` once before it
+    forks; after that the per-task call reads no archive directory."""
+    name = f"graft_primed_{uuid.uuid4().hex[:12]}"
+    archive = tmp_path / "lib.zip"
+    _write_zip(archive, {name: "VALUE = 3\n"})
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module(name).VALUE == 3
+        assert isinstance(sys.path_importer_cache[str(archive)], zipimport.zipimporter)
+        directory_reads.clear()
+        importlib.invalidate_caches()  # priming: the new importer has no stamp yet
+        assert str(archive) in directory_reads
+        directory_reads.clear()
+        importlib.invalidate_caches()
+        assert directory_reads == []
+    finally:
+        sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(str(archive), None)
 
 
 def test_python_313_keeps_zipimporter_untouched(monkeypatch):
