@@ -8,7 +8,7 @@ claims live in a maintained ``KeyedParquetStore`` on DISK, so a
 near-dup is rejected against everything ever admitted.
 
 Store contract: key = ``band_key`` (the certified 4-bands-of-2 LSH
-key, ``dedup_plans.band_key_array``), value = ``(canonical_doc_id,
+key, ``dedup_plans.band_rows``), value = ``(canonical_doc_id,
 hs)`` — the FIRST-ingested doc that claimed the band, carrying its
 int64 hashed-shingle array so candidate verification needs no corpus
 re-read. Judge: band-collision candidates against the store (bucket-
@@ -125,7 +125,7 @@ def delta_neardup_verdicts(
         )
         corpus_hits = (
             bands.join(s, "band_key")
-            .filter(_jaccard(F.col("hs"), F.col("_c_hs")) >= threshold)
+            .filter(_jaccard("hs", "_c_hs") >= threshold)
             .groupBy("doc_id")
             .agg(F.min("canonical_doc_id").alias("_corpus_canonical"))
         )

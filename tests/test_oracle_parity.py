@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_ingestion_task_spark import api
 from data_ingestion_task_spark.plans import registry
 
 registry.load_all()
@@ -16,7 +17,13 @@ def test_query_matches_oracle(name, spark, sf_dir, duck):
     from tools.check_oracle import compare
 
     spec = registry.REGISTRY[name]
-    sdf = spec.fn(spark, sf_dir).toPandas()
+    df = spec.fn(spark, sf_dir)
+    try:
+        sdf = df.toPandas()
+    finally:
+        # no cache of this query may serve a later one
+        api.release(df)
+        spark.catalog.clearCache()
     if spec.oracle is None:
         assert len(sdf) >= 0  # rows-only contract: must at least run
         return

@@ -156,3 +156,29 @@ def test_stream_neardup_gate_replays_batch_band_claims(spark, sf_dir, tmp_path):
     # the gate is a filter, not a sieve: most docs are admitted
     n_dropped = sum(got.values())
     assert 0 < n_dropped < n_docs / 2
+
+
+def test_stream_and_batch_frames_share_one_band_signature(spark, sf_dir, tmp_path):
+    """``band_rows(minhash_sigs(...))`` is pure column work: over the
+    same docs, a streaming frame and a batch frame yield the same
+    ``(doc_id, band_key)`` set."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    inbox = str(tmp_path / "band_inbox")
+    docs.write.parquet(inbox)
+
+    def bands(frame):
+        hsl = frame.select("doc_id", hashed_shingles(F.col("text"), 3).alias("hs"))
+        return band_rows(minhash_sigs(hsl)).select("doc_id", "band_key")
+
+    q = (
+        bands(spark.readStream.schema(docs.schema).parquet(inbox))
+        .writeStream.format("memory")
+        .queryName("band_signature_t1")
+        .option("checkpointLocation", str(tmp_path / "band_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    streamed = {tuple(r) for r in spark.table("band_signature_t1").collect()}
+    batch = {tuple(r) for r in bands(docs).collect()}
+    assert batch and streamed == batch

@@ -94,6 +94,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as ent
+    from data_ingestion_task_spark import api
     from data_ingestion_task_spark.session import get_spark
 
     spark = get_spark("oracle-check")
@@ -107,12 +108,20 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
+        df = None
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            sdf = df.toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures += 1
             continue
+        finally:
+            # each query computes its own intermediates: nothing one
+            # query cached may serve the next
+            if df is not None:
+                api.release(df)
+            spark.catalog.clearCache()
         if name not in oq:
             print(f"pass {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s) [no oracle]")
             continue
