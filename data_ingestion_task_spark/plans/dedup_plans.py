@@ -707,7 +707,7 @@ def _star_components(edges: DataFrame, max_rounds: int = 50) -> tuple[DataFrame,
     return leaves.unionByName(roots), cached
 
 
-def _cluster(spark: SparkSession, sf_dir: str, star: bool = False) -> DataFrame:
+def _cluster(spark: SparkSession, corpus: DataFrame, star: bool = False) -> DataFrame:
     """Near-dup pairs → connected components → canonical election:
     every corpus doc with its cluster id (the component's min doc id),
     cluster size, and whether it is the cluster's canonical
@@ -725,8 +725,9 @@ def _cluster(spark: SparkSession, sf_dir: str, star: bool = False) -> DataFrame:
 
     Docs touching no pair never enter either kernel: the corpus
     left-joins the labels and unmatched docs are their own size-1
-    cluster. The corpus is built once, as both the MinHash input and
-    the left side of that join.
+    cluster. ``corpus`` (``doc_id``, ``text``) is the caller's one
+    build, used as both the MinHash input and the left side of that
+    join.
 
     Caching contract: ``_cached_deps`` holds the one MinHash cache
     (filled by the route's first action: the driver route's
@@ -734,7 +735,6 @@ def _cluster(spark: SparkSession, sf_dir: str, star: bool = False) -> DataFrame:
     route's edge cache and checkpointed loop survivor as ReleaseHandles
     (their blocks live on the RDD, so plain ``unpersist`` would not
     free them)."""
-    corpus = _corpus(spark, sf_dir)
     pairs, deps = _minhash_pairs(spark, corpus)
     pairs = pairs.select("doc_a", "doc_b")
     local = None if star else pairs.limit(_DRIVER_CC_MAX_PAIRS + 1).toPandas()
@@ -799,7 +799,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver in one Arrow round-trip, larger ones by star contraction.
     Below the cap per-round driver coordination would be the whole
     cost of a distributed loop, so that route runs no per-round jobs."""
-    return _cluster(spark, sf_dir)
+    return _cluster(spark, _corpus(spark, sf_dir))
 
 
 @query("dedup_cluster_star", oracle=_D_CLUSTER_ORACLE)
@@ -810,7 +810,7 @@ def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     route that only large graphs take stays under the oracle gate at
     test size. O(log n) rounds regardless of component diameter
     (pinned by the 60-node chain in tests/test_plan_properties.py)."""
-    return _cluster(spark, sf_dir, star=True)
+    return _cluster(spark, _corpus(spark, sf_dir), star=True)
 
 
 # ---------------------------------------------------------------------------
@@ -873,16 +873,17 @@ def dedup_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     and exact — no float accumulation; the single final division is
     deterministic.
 
-    Plan shape: the verified cluster assignment is reused from
-    :func:`dedup_cluster_canonical` (labelled on the driver in one
-    Arrow round-trip up to its pair cap, by star contraction above
-    it); on top of it this adds one broadcast join to the documents
+    Plan shape: the verified cluster assignment is
+    :func:`dedup_cluster_canonical`'s :func:`_cluster` (labelled on the
+    driver in one Arrow round-trip up to its pair cap, by star
+    contraction above it), over the same corpus build that gives the
+    token counts; on top of it this adds one broadcast join to the documents
     dim (planted copies resolve their source via base_id = doc_id %
     100000) and one source-cardinality hash agg — map-side partial
     aggregation absorbs the corpus volume."""
-    clusters = dedup_cluster_canonical(spark, sf_dir)
-    deps = getattr(clusters, "_cached_deps", [])
-    toks = _corpus(spark, sf_dir).select("doc_id", word_len(F.col("text")).alias("tok"))
+    corpus = _corpus(spark, sf_dir)
+    clusters = _cluster(spark, corpus)
+    toks = corpus.select("doc_id", word_len(F.col("text")).alias("tok"))
     src = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("base_id"), "source"
     )
@@ -908,7 +909,7 @@ def dedup_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    out._cached_deps = deps
+    out._cached_deps = clusters._cached_deps
     return out
 
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from .ingest import document_stream
+from .ingest import document_stream, run_stream
 
 _OUT_SCHEMA = "doc_id long, cap_key string, ts_ms long, admitted boolean"
 _STATE_SCHEMA = "n_admitted int, last_ts_ms long"
@@ -171,12 +171,5 @@ def start_capped_ingest(
     ``max_files_per_trigger=1`` to force the cross-batch counter
     path."""
     stream = document_stream(spark, inbox, schema, max_files_per_trigger)
-    return (
-        quota_verdicts(stream, key_col, cap, horizon_s=horizon_s)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
+    verdicts = quota_verdicts(stream, key_col, cap, horizon_s=horizon_s)
+    return run_stream(verdicts, checkpoint, out_dir, query_name)

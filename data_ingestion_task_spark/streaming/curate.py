@@ -52,7 +52,7 @@ from pyspark.sql.types import StructType
 
 from ..functions.text import fingerprint_md5, hash64, normalized_for_fingerprint
 from .dedup import dedup_stream
-from .ingest import document_stream, ingest_transform
+from .ingest import document_stream, ingest_transform, run_stream
 
 #: Audit columns :func:`curate_stream` adds to every admitted row —
 #: the per-rule Gopher booleans the batch facade exposes, so an
@@ -265,9 +265,7 @@ def curate_stream(
         )
     if fingerprint_col not in out.columns:
         out = out.withColumn(fingerprint_col, fingerprint_md5(F.col(text_col)))
-    return dedup_stream(
-        out, watermark=watermark, ts_col=ts_col, fingerprint_col=fingerprint_col
-    )
+    return dedup_stream(out, [fingerprint_col], watermark=watermark, ts_col=ts_col)
 
 
 def start_curated_ingest(
@@ -296,22 +294,15 @@ def start_curated_ingest(
     ``_arrival_ts`` instead of re-stamping), then read the surviving
     corpus with :func:`final_corpus`."""
     stream = ingest_transform(document_stream(spark, inbox, schema))
-    return (
-        curate_stream(
-            stream,
-            watermark=watermark,
-            ppx_model=ppx_model,
-            ppx_band=ppx_band,
-            dsir_model=dsir_model,
-            dsir_floor=dsir_floor,
-        )
-        .writeStream.format("parquet")
-        .option("path", admitted_dir)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    admitted = curate_stream(
+        stream,
+        watermark=watermark,
+        ppx_model=ppx_model,
+        ppx_band=ppx_band,
+        dsir_model=dsir_model,
+        dsir_floor=dsir_floor,
     )
+    return run_stream(admitted, checkpoint, admitted_dir, query_name)
 
 
 def final_corpus(

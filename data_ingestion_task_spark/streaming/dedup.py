@@ -15,9 +15,12 @@ the state store — unbounded growth, the classic streaming-dedup OOM at
 100 TB/day. The watermarked form expires state past the horizon, so
 state size is (arrival rate × horizon), a knob — the standard
 at-ingest dedup contract (re-posts of old content past the horizon are
-re-admitted; the periodic BATCH ``dedup_exact`` pass over the
-accumulated corpus catches those, which is exactly how production
-pipelines split the two).
+re-admitted; the store gate, ``store_dedup.store_gate``, and the
+periodic BATCH ``dedup_exact`` pass over the accumulated corpus catch
+those, which is exactly how production pipelines split the two).
+:func:`dedup_stream` is the package's one exact streaming-dedup
+mechanism: the document and event ingests here, the curation pipeline
+and the store gate's RAM stage all call it.
 
 Scale: the only exchange is the stream side hashing on fingerprint to
 co-locate duplicates with their state shard; state rows are one
@@ -26,57 +29,90 @@ fingerprint + timestamp each. No Python boundary anywhere.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.text import fingerprint_md5
-from .ingest import document_stream, ingest_transform
+from .ingest import (
+    _ntz_to_ltz,
+    document_stream,
+    idempotent_batch_sink,
+    ingest_transform,
+    run_stream,
+)
 
 
 def dedup_stream(
     stream: DataFrame,
+    keys: Sequence[str] = ("fingerprint",),
     watermark: str = "10 minutes",
     ts_col: str = "_arrival_ts",
-    fingerprint_col: str = "fingerprint",
 ) -> DataFrame:
-    """Drop rows whose ``fingerprint_col`` was already seen within the
-    watermark horizon. If ``ts_col`` is absent an arrival-time column
-    is stamped (processing-time semantics — the inbox regime, where
-    files carry no event time); pass an existing event-time column to
-    dedup on event time instead. Which duplicate survives is
-    first-arrival (per micro-batch execution order) — the streaming
-    analogue of ``dedup_exact``'s lowest-id rule, where "first" is
-    arrival order rather than key order."""
-    if ts_col not in stream.columns:
+    """The package's one exact streaming dedup: drop rows whose
+    ``keys`` were already seen within the watermark horizon. If
+    ``ts_col`` is absent an arrival-time column is stamped
+    (processing-time semantics — the inbox regime, where files carry
+    no event time); an existing event-time column is used as is, with
+    TIMESTAMP_NTZ coerced to LTZ (``ingest._ntz_to_ltz``: watermarks
+    reject NTZ). Which duplicate survives is first-arrival (per
+    micro-batch execution order) — the streaming analogue of
+    ``dedup_exact``'s lowest-id rule, where "first" is arrival order
+    rather than key order. Re-deliveries later than the horizon pass
+    through: the store gate (``store_dedup.store_gate``) is the
+    unbounded-horizon exact path."""
+    if ts_col in stream.columns:
+        stream = stream.withColumn(ts_col, _ntz_to_ltz(stream, ts_col))
+    else:
         stream = stream.withColumn(ts_col, F.current_timestamp())
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [fingerprint_col]
+        list(keys)
     )
 
 
 def start_dedup_ingest(
     spark: SparkSession,
     inbox: str,
+    out_dir: str,
     checkpoint: str,
     schema: StructType,
+    dedup_cols: Sequence[str] = ("fingerprint",),
     watermark: str = "10 minutes",
-    query_name: str = "deduped_docs",
 ) -> StreamingQuery:
-    """inbox → consolidate (fingerprint et al.) → watermark-bounded
-    exact dedup → in-memory table ``query_name`` (swap for a parquet
-    sink in production). ``availableNow`` drains the backlog and
-    stops — the batch-style run mode used by tests."""
+    """inbox → consolidate (fingerprint et al.) → :func:`dedup_stream`
+    on ``dedup_cols`` (default: the content fingerprint) →
+    ``idempotent_batch_sink`` at ``out_dir``. Re-delivered or
+    re-scanned documents (the at-least-once file source, or upstream
+    OCR retries — ocr_agent_8_29.py checksummed-transfer concern) are
+    dropped before they reach the sink; state is (arrival rate ×
+    ``watermark``), one key row each."""
     stream = ingest_transform(document_stream(spark, inbox, schema))
-    return (
-        dedup_stream(stream, watermark=watermark)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    deduped = dedup_stream(stream, dedup_cols, watermark)
+    return run_stream(deduped, checkpoint, idempotent_batch_sink(out_dir))
+
+
+def start_bounded_deduped_ingest(
+    spark: SparkSession,
+    inbox: str,
+    out_dir: str,
+    checkpoint: str,
+    schema: StructType,
+    dedup_cols: list[str],
+    ts_col: str = "ts",
+    horizon: str = "2 hours",
+) -> StreamingQuery:
+    """Raw event rows → :func:`dedup_stream` on ``dedup_cols`` in
+    EVENT time (``ts_col``) → ``idempotent_batch_sink`` at
+    ``out_dir``. Duplicate records arriving within ``horizon`` of each
+    other are dropped; state entries expire as the watermark passes
+    them, so the store holds one key per DISTINCT record inside the
+    horizon instead of per record ever seen."""
+    stream = document_stream(spark, inbox, schema)
+    deduped = dedup_stream(stream, dedup_cols, watermark=horizon, ts_col=ts_col)
+    return run_stream(deduped, checkpoint, idempotent_batch_sink(out_dir))
 
 
 def first_occurrence_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -206,7 +242,8 @@ def start_neardup_ingest(
     only needs ``doc_id``/``text``) → band-claim state machine →
     per-doc rollup (``near_dup = max(band_dup)``, an intra-batch
     aggregate: a doc's band rows share its micro-batch by
-    construction) → parquet verdict log at ``out_dir``.
+    construction) → ``idempotent_batch_sink`` verdict log at
+    ``out_dir``: one row per doc, also across a checkpoint replay.
     ``max_files_per_trigger`` bounds micro-batch size when a backlog
     accumulates (the ``document_stream`` default); tests pass 1 to
     force one micro-batch per file so the cross-batch state path is
@@ -217,22 +254,15 @@ def start_neardup_ingest(
     if consolidate:
         stream = ingest_transform(stream)
     verdicts = near_dedup_band_verdicts(stream, horizon_s=horizon_s)
+    write = idempotent_batch_sink(out_dir)
 
-    def _rollup(batch: DataFrame, _batch_id: int) -> None:
-        (
-            batch.groupBy("doc_id")
-            .agg(
+    def _rollup(batch: DataFrame, batch_id: int) -> None:
+        write(
+            batch.groupBy("doc_id").agg(
                 F.max("ts_ms").alias("ts_ms"),
                 F.max("band_dup").alias("near_dup"),
-            )
-            .write.mode("append")
-            .parquet(out_dir)
+            ),
+            batch_id,
         )
 
-    return (
-        verdicts.writeStream.foreachBatch(_rollup)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(verdicts, checkpoint, _rollup, query_name)

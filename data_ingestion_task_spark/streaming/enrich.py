@@ -25,7 +25,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.pii import pii_span_count, redact_pii
-from .ingest import document_stream, ingest_transform
+from .ingest import document_stream, idempotent_batch_sink, ingest_transform, run_stream
 
 
 def enrich_stream(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:
@@ -49,14 +49,7 @@ def start_enriched_event_sink(
     """inbox parquet stream ⋈ broadcast dim → in-memory table
     ``query_name`` (swap for a parquet sink in production)."""
     stream = document_stream(spark, inbox, schema)
-    return (
-        enrich_stream(stream, dim, key)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(enrich_stream(stream, dim, key), checkpoint, None, query_name)
 
 
 def start_redacted_document_ingest(
@@ -77,13 +70,4 @@ def start_redacted_document_ingest(
         ),
         extra_cols=("pii_spans_removed",),
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        scrubbed.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(scrubbed, checkpoint, idempotent_batch_sink(out_dir))

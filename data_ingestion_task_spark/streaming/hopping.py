@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from .ingest import document_stream
+from .ingest import document_stream, run_stream
 
 #: Defaults mirror the batch twin (plans/window_plans.py).
 DURATION_S = 3600
@@ -85,12 +85,5 @@ def start_hopping_sink(
     each window emits exactly once when the watermark passes its
     end."""
     stream = document_stream(spark, inbox, schema)
-    return (
-        hopping_counts_stream(stream, **kwargs)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    counts = hopping_counts_stream(stream, **kwargs)
+    return run_stream(counts, checkpoint, None, query_name, output_mode="complete")

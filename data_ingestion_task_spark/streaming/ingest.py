@@ -9,12 +9,17 @@ Design:
   same DataFrame expression graph runs under ``spark.read`` and
   ``spark.readStream`` unchanged, so every streaming pipeline has an
   oracle-checkable batch twin (plans/text_plans.py, events_plans.py).
+- One source and one runner for the whole package: every pipeline
+  reads through :func:`document_stream` (its only ``readStream``) and
+  starts through :func:`run_stream` (its only ``writeStream``, the one
+  place the checkpoint, query name and ``availableNow`` trigger are
+  set). A module contributes the transform and the sink, nothing else.
 - Checkpointing replaces the reference's interim-CSV saves
   (rag_2_26_1.py:141-151): source offsets give at-least-once replay
-  across restarts; the document sink upgrades that to exactly-once
-  contents by writing each micro-batch to an idempotent
-  ``batch_id``-keyed path (see ``start_document_ingest``). Re-running
-  with the same checkpoint ingests only new files.
+  across restarts; :func:`idempotent_batch_sink` upgrades that to
+  exactly-once contents by writing each micro-batch to its own
+  ``batch_id``-keyed path. Re-running with the same checkpoint ingests
+  only new files.
 - ``foreachBatch`` computes the run-summary stats the OCR agent logs
   (docs, pages, words — ocr_agent_8_29.py:28-29) without a second
   pass: the batch is already materialized for the sink.
@@ -35,6 +40,9 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.text import char_len, fingerprint_md5, lang_id, quality_score, word_len
+
+#: A ``foreachBatch`` function: ``(batch_df, batch_id)``.
+Sink = Callable[[DataFrame, int], None]
 
 
 def ingest_transform(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -70,6 +78,53 @@ def document_stream(
     )
 
 
+def run_stream(
+    stream: DataFrame,
+    checkpoint: str,
+    sink: Sink | str | None,
+    query_name: str | None = None,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """The package's one ``writeStream``: start ``stream`` under the
+    ``checkpoint`` with ``trigger(availableNow=True)``, which drains
+    the current backlog and stops (the batch-style run mode the tests
+    use; production drops the trigger and lets it tail).
+
+    ``sink`` is a ``foreachBatch`` function ``(batch_df, batch_id)``,
+    a parquet file-sink path, or ``None`` for the in-memory table
+    ``query_name`` (inspection and batch-parity harnesses)."""
+    writer = (
+        stream.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif sink is None:
+        if query_name is None:
+            raise ValueError("an in-memory sink needs a query_name to name its table")
+        writer = writer.format("memory")
+    else:
+        writer = writer.format("parquet").option("path", sink)
+    return writer.start()
+
+
+def idempotent_batch_sink(out_dir: str) -> Sink:
+    """The exactly-once CONTENTS writer (SCALE.md §7): each micro-batch
+    overwrites its own ``out_dir/batch_id=N`` path. The checkpoint
+    gives at-least-once micro-batch replay; a replayed batch (driver
+    died between write and checkpoint commit) rewrites the same path
+    instead of appending duplicates. Readers see ``batch_id`` as a
+    partition provenance column; drop it if unwanted."""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+
+    return write
+
+
 def start_document_ingest(
     spark: SparkSession,
     inbox: str,
@@ -78,37 +133,30 @@ def start_document_ingest(
     schema: StructType,
     on_batch_summary: Callable[[dict], None] | None = None,
 ) -> StreamingQuery:
-    """inbox → consolidate → parquet sink. ``availableNow`` drains the
-    current backlog and stops — the batch-style run mode; drop it for
-    continuous tailing.
-
-    Delivery: the checkpoint gives at-least-once micro-batch replay; the
-    sink makes it exactly-once CONTENTS by writing each micro-batch to a
-    ``batch_id=N`` keyed path with overwrite — a replayed batch (driver
-    died between write and checkpoint commit) rewrites the same path
-    instead of appending duplicates. Readers see ``batch_id`` as a
-    partition provenance column; drop it if unwanted."""
+    """inbox → consolidate → :func:`idempotent_batch_sink` at
+    ``out_dir``. ``on_batch_summary`` receives each micro-batch's
+    run-summary stats (docs, words, chars, mean quality), computed
+    from the batch the sink already materialized."""
     stream = ingest_transform(document_stream(spark, inbox, schema))
+    write = idempotent_batch_sink(out_dir)
+    if on_batch_summary is None:
+        return run_stream(stream, checkpoint, write)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def write_and_summarize(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-        if on_batch_summary is not None:
+        try:
+            write(batch_df, batch_id)
             row = batch_df.agg(
                 F.count("*").alias("docs"),
                 F.coalesce(F.sum("word_len"), F.lit(0)).alias("words"),
                 F.coalesce(F.sum("char_len"), F.lit(0)).alias("chars"),
                 F.coalesce(F.avg("quality"), F.lit(0.0)).alias("avg_quality"),
             ).collect()[0]
-            on_batch_summary({"batch_id": batch_id, **row.asDict()})
-        batch_df.unpersist()
+        finally:
+            batch_df.unpersist()
+        on_batch_summary({"batch_id": batch_id, **row.asDict()})
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, write_and_summarize)
 
 
 def _ntz_to_ltz(df: DataFrame, col: str) -> "F.Column":
@@ -158,89 +206,6 @@ def start_windowed_event_counts(
     sink (complete mode) for inspection; swap for a parquet/Kafka sink
     in production (append mode emits windows as the watermark passes
     them)."""
-    events = document_stream(spark, inbox, schema, max_files_per_trigger=64)
+    events = document_stream(spark, inbox, schema)
     agg = windowed_event_counts(events, watermark)
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_bounded_deduped_ingest(
-    spark: SparkSession,
-    inbox: str,
-    out_dir: str,
-    checkpoint: str,
-    schema: StructType,
-    dedup_cols: list[str],
-    ts_col: str = "ts",
-    horizon: str = "2 hours",
-) -> StreamingQuery:
-    """State-BOUNDED streaming dedup: ``withWatermark`` +
-    ``dropDuplicatesWithinWatermark`` — the production upgrade of
-    :func:`start_deduped_ingest` for event-time sources. Duplicate
-    records arriving within ``horizon`` of each other are dropped;
-    state entries expire as the watermark passes them, so the store
-    holds one key per DISTINCT record inside the horizon instead of
-    per record ever seen — at 100 TB/day that is the difference
-    between GBs and an unbounded store. (Re-deliveries later than the
-    horizon pass through; dedupe those at rest with dedup_exact.)"""
-    stream = document_stream(spark, inbox, schema, max_files_per_trigger=64)
-    stream = stream.withColumn(ts_col, _ntz_to_ltz(stream, ts_col)).withWatermark(
-        ts_col, horizon
-    )
-    deduped = stream.dropDuplicatesWithinWatermark(dedup_cols)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_deduped_ingest(
-    spark: SparkSession,
-    inbox: str,
-    out_dir: str,
-    checkpoint: str,
-    schema: StructType,
-    dedup_cols: list[str] | None = None,
-) -> StreamingQuery:
-    """Incremental EXACT dedup on the ingest path: re-delivered or
-    re-scanned documents (the at-least-once file source, or upstream
-    OCR retries — ocr_agent_8_29.py checksummed-transfer concern) are
-    dropped by content fingerprint before they reach the sink.
-
-    ``dropDuplicates`` keeps one state entry per fingerprint;
-    production bounds that state with ``withWatermark`` +
-    ``dropDuplicatesWithinWatermark`` (dup window = watermark horizon).
-    The local testdata has no event-time column on documents, so this
-    uses the unbounded variant — the state-bounding upgrade is a
-    one-line swap documented here on purpose.
-
-    Scale: state lives in the state store partitioned by fingerprint —
-    one shuffle per micro-batch on the fingerprint key; entries are a
-    16-byte md5 each, so 10^9 seen-docs ≈ tens of GB across 1000
-    executors' stores.
-    """
-    dedup_cols = dedup_cols or ["fingerprint"]
-    stream = ingest_transform(document_stream(spark, inbox, schema))
-    deduped = stream.dropDuplicates(dedup_cols)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(agg, checkpoint, None, query_name, output_mode="complete")

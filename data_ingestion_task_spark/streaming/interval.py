@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from .ingest import document_stream
+from .ingest import document_stream, run_stream
 
 #: Defaults mirror the batch twin (plans/interval_plans.py).
 BIN_S = 7200
@@ -103,11 +103,5 @@ def start_interval_tagged_sink(
     production; the idempotent batch_id contract of
     ``streaming.ingest`` applies unchanged)."""
     stream = document_stream(spark, inbox, schema)
-    return (
-        interval_tag_stream(stream, intervals)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    tagged = interval_tag_stream(stream, intervals)
+    return run_stream(tagged, checkpoint, None, query_name)

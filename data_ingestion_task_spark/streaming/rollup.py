@@ -55,7 +55,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..sources.upsert import KeyedParquetStore
-from .ingest import document_stream
+from .ingest import document_stream, run_stream
 
 #: Composite MERGE key: one store row per (window_start, event_type).
 ROLLUP_KEY = "rollup_key"
@@ -123,14 +123,12 @@ def start_rollup_maintenance(
             ),
         )
 
-    return (
-        hourly_rollup_stream(stream, watermark=watermark)
-        .writeStream.outputMode("update")
-        .foreachBatch(store.foreach_batch_merger(_with_key, seq_col="n_events"))
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        hourly_rollup_stream(stream, watermark=watermark),
+        checkpoint,
+        store.foreach_batch_merger(_with_key, seq_col="n_events"),
+        query_name,
+        output_mode="update",
     )
 
 

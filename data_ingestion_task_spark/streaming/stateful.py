@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from .ingest import document_stream
+from .ingest import document_stream, run_stream
 
 SESSION_GAP_S = 1800  # 30 min, same constant as the batch twin
 
@@ -102,12 +102,5 @@ def start_stateful_sessions(
     the cross-batch state path is actually exercised; production would
     raise it and point the sink at a keyed upsert store."""
     events = document_stream(spark, inbox, schema, max_files_per_trigger=1)
-    out = stateful_user_sessions(events)
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sessions = stateful_user_sessions(events)
+    return run_stream(sessions, checkpoint, None, query_name, output_mode="update")

@@ -49,8 +49,6 @@ recent content (`/root/reference/code/python/ocr_agent_8_29.py:21-33`).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -63,7 +61,7 @@ from ..plans.dedup_store_plans import (
     fingerprint_store,
 )
 from .dedup import dedup_stream
-from .ingest import document_stream, ingest_transform
+from .ingest import Sink, document_stream, ingest_transform, run_stream
 
 __all__ = [
     "fingerprint_store",
@@ -72,10 +70,7 @@ __all__ = [
     "store_gate",
 ]
 
-Gate = Callable[[DataFrame, int], None]
-
-
-def store_gate(store, verdict_dir: str) -> Gate:
+def store_gate(store, verdict_dir: str) -> Sink:
     """The exact registry's foreachBatch body: judge → append the
     ``(doc_id, fingerprint, verdict, canonical_doc_id)`` audit log at
     ``verdict_dir`` → MERGE the new fingerprints into ``store``. Rows
@@ -107,7 +102,7 @@ def start_store_gate_ingest(
     inbox: str,
     checkpoint: str,
     schema: StructType,
-    gate: Gate,
+    gate: Sink,
     watermark: str | None = None,
     max_files_per_trigger: int = 64,
     query_name: str = "store_gate_ingest",
@@ -144,13 +139,7 @@ def start_store_gate_ingest(
     stream = document_stream(spark, inbox, schema, max_files_per_trigger)
     if watermark is not None:
         stream = dedup_stream(ingest_transform(stream), watermark=watermark)
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(stream, checkpoint, gate, query_name)
 
 
 def store_admitted(store) -> DataFrame:

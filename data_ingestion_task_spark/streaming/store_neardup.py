@@ -46,7 +46,7 @@ from ..plans.neardup_store_plans import (
     delta_neardup_verdicts,
     neardup_band_store,
 )
-from .store_dedup import Gate
+from .ingest import Sink
 
 __all__ = [
     "neardup_band_store",
@@ -55,7 +55,7 @@ __all__ = [
 ]
 
 
-def neardup_gate(store, verdict_dir: str) -> Gate:
+def neardup_gate(store, verdict_dir: str) -> Sink:
     """The band registry's foreachBatch body: shingle-hash → band grain
     (persisted — the 8-salted-md5 minhash map runs once, not once per
     judge/admit reference) → judge ONCE against the pre-merge store at

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.caps import start_capped_ingest
 
@@ -47,7 +48,7 @@ def test_quota_counts_match_batch_cap_contract(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="caps_t1",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     verdicts = spark.read.parquet(str(out_dir))
     # one verdict per arriving doc
@@ -100,7 +101,7 @@ def test_quota_null_keys_share_one_bucket(spark, tmp_path):
         cap=3,
         query_name="caps_t2",
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {
         r["cap_key"]: r["n"]
         for r in spark.read.parquet(str(out_dir))
@@ -152,7 +153,7 @@ def test_quota_horizon_refills_idle_key(spark, tmp_path):
         max_files_per_trigger=1,
         query_name="caps_t3",
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     v = spark.read.parquet(str(out_dir))
     first = {r["doc_id"] for r in v.filter("admitted and doc_id < 100").collect()}
     second = {r["doc_id"] for r in v.filter("admitted and doc_id >= 100").collect()}
@@ -190,7 +191,7 @@ def test_quota_horizon_refills_gap_inside_one_batch(spark, tmp_path):
         horizon_s=600,  # bursts are 10 000 s apart on event time
         query_name="caps_t4",
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     v = spark.read.parquet(str(out_dir))
     assert v.count() == 10  # one batch saw every row
     first = {r["doc_id"] for r in v.filter("admitted and doc_id < 100").collect()}

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.curate import (
     GOPHER_AUDIT_COLS,
@@ -60,7 +61,7 @@ def test_stream_curation_matches_batch_facade(spark, sf_dir, tmp_path):
         admitted_dir=str(admitted_dir),
         query_name="curated_t1",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     admitted = spark.read.parquet(str(admitted_dir))
     streamed = [r["fingerprint"] for r in admitted.select("fingerprint").collect()]
@@ -149,7 +150,7 @@ def test_scored_stream_curation_matches_batch_facade(spark, sf_dir, tmp_path):
         dsir_model=dsir_model,
         dsir_floor=floor,
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     admitted = spark.read.parquet(str(admitted_dir))
     streamed = [r["fingerprint"] for r in admitted.select("fingerprint").collect()]
@@ -226,7 +227,7 @@ def test_curated_ingest_neardup_chain(spark, sf_dir, tmp_path):
         admitted_dir=str(admitted_dir),
         query_name="curated_t2",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     # both pair members clear quality and exact dedup (texts differ)
     pair_ids = {base["doc_id"], base["doc_id"] + 2_000_000}
     admitted = spark.read.parquet(str(admitted_dir))
@@ -246,7 +247,7 @@ def test_curated_ingest_neardup_chain(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         consolidate=False,
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
     flagged = {
         r["doc_id"]
         for r in spark.read.parquet(str(verdict_dir))

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.plans.dedup_plans import (
     band_rows,
     hashed_shingles,
@@ -44,16 +45,11 @@ def test_stream_dedup_matches_batch_survivor_set(spark, sf_dir, tmp_path):
     arriving = docs.unionByName(reposts)
 
     schema = spark.read.parquet(str(inbox)).schema
-    q = start_dedup_ingest(
-        spark,
-        str(inbox),
-        str(tmp_path / "ckpt"),
-        schema,
-        query_name="dedup_docs_t1",
-    )
-    q.awaitTermination(120)
+    out_dir = str(tmp_path / "out")
+    q = start_dedup_ingest(spark, str(inbox), out_dir, str(tmp_path / "ckpt"), schema)
+    drain(q, 120)
 
-    out = spark.table("dedup_docs_t1")
+    out = spark.read.parquet(out_dir).drop("batch_id")
     streamed = [r["fingerprint"] for r in out.select("fingerprint").collect()]
     batch = {
         r["fingerprint"]
@@ -115,7 +111,7 @@ def test_stream_neardup_gate_replays_batch_band_claims(spark, sf_dir, tmp_path):
         query_name="neardup_t1",
         max_files_per_trigger=1,
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     verdicts = spark.read.parquet(str(out_dir)).collect()
     got = {r["doc_id"]: r["near_dup"] for r in verdicts}
@@ -178,7 +174,7 @@ def test_stream_and_batch_frames_share_one_band_signature(spark, sf_dir, tmp_pat
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     streamed = {tuple(r) for r in spark.table("band_signature_t1").collect()}
     batch = {tuple(r) for r in bands(docs).collect()}
     assert batch and streamed == batch

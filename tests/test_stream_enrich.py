@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.functions.pii import PII_PATTERNS, pii_span_count
 from data_ingestion_task_spark.streaming.enrich import (
     enrich_stream,
@@ -32,7 +33,7 @@ def test_stream_static_join_matches_batch_twin(spark, sf_dir, tmp_path):
         spark, str(inbox), dim, "user_id", str(tmp_path / "ckpt"), schema,
         query_name="enriched_ev",
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     streamed = spark.table("enriched_ev")
     batch = enrich_stream(events, dim, "user_id")
@@ -65,7 +66,7 @@ def test_redacted_ingest_scrubs_before_sink(spark, sf_dir, tmp_path):
     q = start_redacted_document_ingest(
         spark, str(inbox), str(tmp_path / "out"), str(tmp_path / "ckpt2"), schema
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     got = spark.read.parquet(str(tmp_path / "out"))
     assert got.count() == 100

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.plans.window_plans import events_hopping_window
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.hopping import start_hopping_sink
@@ -24,7 +25,7 @@ def test_stream_hopping_matches_batch(spark, sf_dir, tmp_path):
     q = start_hopping_sink(
         spark, str(inbox), str(tmp_path / "ckpt"), schema, query_name="hop_counts"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     streamed = {
         (r["window_start"], r["event_type"]): r

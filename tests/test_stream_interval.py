@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.interval import (
     LEN_S,
@@ -32,7 +33,7 @@ def test_stream_interval_tags_match_batch_and_naive(spark, sf_dir, tmp_path):
         spark, str(inbox), intervals, str(tmp_path / "ckpt"), schema,
         query_name="iv_tagged",
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     streamed = spark.table("iv_tagged").select("event_id", "interval_id")
     batch = interval_tag_stream(events, intervals).select("event_id", "interval_id")

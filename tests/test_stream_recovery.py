@@ -7,10 +7,10 @@ machines asserted by an actual interrupted run, not replay logs."""
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
+from conftest import drain, stop_after_first_progress
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.curate import (
     batch_curation_survivor_fingerprints,
@@ -30,20 +30,6 @@ def _spread_files(df, inbox, n_files: int, key: str = "doc_id") -> None:
     )
     for i, p in enumerate(parts):
         os.utime(os.path.join(inbox, p), (1_700_000_000 + 60 * i,) * 2)
-
-
-def _stop_after_first_progress(q, max_wait_s: float = 120.0) -> None:
-    """Kill the query as soon as at least one micro-batch has reported
-    progress — mid-drain for a multi-file backlog (if the drain won the
-    race and finished, the restart is a no-op and the assertion still
-    holds, just with less bite)."""
-    t0 = time.monotonic()
-    while time.monotonic() - t0 < max_wait_s:
-        if any(p and p.get("numInputRows", 0) > 0 for p in (q.recentProgress or [])):
-            break
-        time.sleep(0.1)
-    q.stop()
-    q.awaitTermination(60)
 
 
 def _verdict_pairs(spark, out_dir):
@@ -74,7 +60,7 @@ def test_neardup_gate_recovers_from_mid_drain_kill(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="nd_rec_ref",
     )
-    q_ref.awaitTermination(180)
+    drain(q_ref, 180)
     want = _verdict_pairs(spark, ref_out)
 
     # interrupted run: kill after the first progress, restart from the
@@ -90,7 +76,7 @@ def test_neardup_gate_recovers_from_mid_drain_kill(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="nd_rec_kill",
     )
-    _stop_after_first_progress(q1)
+    stop_after_first_progress(q1)
     q2 = start_neardup_ingest(
         spark,
         str(inbox),
@@ -100,13 +86,16 @@ def test_neardup_gate_recovers_from_mid_drain_kill(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="nd_rec_resume",
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
 
     got = _verdict_pairs(spark, out)
     assert got == want
     # one verdict per arriving doc (set grain — an uncommitted-batch
     # replay may append duplicate identical rows, never conflicting ones)
     assert len({d for d, _ in got}) == arriving.count()
+    # ...and at row grain: a replayed batch overwrites its own
+    # batch_id path, so the log holds exactly one row per arriving doc
+    assert spark.read.parquet(str(out)).count() == arriving.count()
     # the re-posts were genuinely flagged across the kill boundary
     flagged = {d for d, nd in got if nd}
     assert {d for d in flagged if d >= 1_000_000}
@@ -132,7 +121,7 @@ def test_curated_ingest_recovers_from_mid_drain_kill(spark, sf_dir, tmp_path):
         admitted_dir=str(admitted_dir),
         query_name="cur_rec_kill",
     )
-    _stop_after_first_progress(q1)
+    stop_after_first_progress(q1)
     q2 = start_curated_ingest(
         spark,
         str(inbox),
@@ -141,7 +130,7 @@ def test_curated_ingest_recovers_from_mid_drain_kill(spark, sf_dir, tmp_path):
         admitted_dir=str(admitted_dir),
         query_name="cur_rec_resume",
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
 
     admitted = spark.read.parquet(str(admitted_dir))
     streamed = [r["fingerprint"] for r in admitted.select("fingerprint").collect()]

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.rollup import (
     read_rollup,
@@ -52,7 +53,7 @@ def test_maintained_rollup_converges_to_batch(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="rollup_t1",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
@@ -97,7 +98,7 @@ def test_maintained_rollup_converges_to_batch(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="rollup_t2",
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
     got2 = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
         for r in read_rollup(store).collect()

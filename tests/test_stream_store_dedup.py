@@ -6,10 +6,10 @@ a mid-drain kill, and verdict parity with the batch delta operator."""
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
+from conftest import drain, stop_after_first_progress
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.store_dedup import (
     fingerprint_store,
@@ -51,7 +51,7 @@ def test_store_gate_rejects_reposts_across_batches_and_runs(spark, sf_dir, tmp_p
         max_files_per_trigger=1,
         query_name="sd_t1",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     admitted = store_admitted(store)
     n_distinct = docs.select("text").distinct().count()
@@ -78,7 +78,7 @@ def test_store_gate_rejects_reposts_across_batches_and_runs(spark, sf_dir, tmp_p
         store_gate(store, str(tmp_path / "sd_verdicts2")),
         query_name="sd_t2",
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
     assert store_admitted(store).count() == n_distinct  # nothing new
     v2 = spark.read.parquet(str(tmp_path / "sd_verdicts2"))
     assert v2.filter(F.col("verdict") != "dup_of_corpus").count() == 0
@@ -102,13 +102,7 @@ def test_store_gate_exactly_once_at_store_grain_across_kill(spark, sf_dir, tmp_p
         max_files_per_trigger=1,
         query_name="sk_kill",
     )
-    t0 = time.monotonic()
-    while time.monotonic() - t0 < 120:
-        if any(p and p.get("numInputRows", 0) > 0 for p in (q1.recentProgress or [])):
-            break
-        time.sleep(0.1)
-    q1.stop()
-    q1.awaitTermination(60)
+    stop_after_first_progress(q1)
     q2 = start_store_gate_ingest(
         spark,
         str(inbox),
@@ -118,7 +112,7 @@ def test_store_gate_exactly_once_at_store_grain_across_kill(spark, sf_dir, tmp_p
         max_files_per_trigger=1,
         query_name="sk_resume",
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
     got = {
         (r["fingerprint"], r["corpus_doc_id"])
         for r in store_admitted(store).collect()
@@ -175,7 +169,7 @@ def test_dual_gate_horizon_absorbs_store_rejects(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="dg_t1",
     )
-    q.awaitTermination(240)
+    drain(q, 240)
 
     verdicts = spark.read.parquet(str(tmp_path / "dg_verdicts"))
     # the RAM gate ate every within-horizon re-post BEFORE the store
@@ -204,7 +198,7 @@ def test_dual_gate_horizon_absorbs_store_rejects(spark, sf_dir, tmp_path):
         watermark="10 minutes",
         query_name="dg_t2",
     )
-    q2.awaitTermination(240)
+    drain(q2, 240)
     v2 = spark.read.parquet(str(tmp_path / "dg_verdicts2"))
     assert v2.count() > 0  # these DID reach the store gate
     assert v2.filter(F.col("verdict") != "dup_of_corpus").count() == 0

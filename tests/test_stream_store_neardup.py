@@ -8,10 +8,10 @@ against its own stored claim)."""
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
+from conftest import drain, stop_after_first_progress
 from data_ingestion_task_spark.functions.text import words
 from data_ingestion_task_spark.sources.tables import load_table
 from data_ingestion_task_spark.streaming.store_dedup import start_store_gate_ingest
@@ -67,7 +67,7 @@ def test_neardup_gate_rejects_reposts_across_batches_and_runs(
         max_files_per_trigger=1,
         query_name="nd_t1",
     )
-    q.awaitTermination(240)
+    drain(q, 240)
 
     verdicts = spark.read.parquet(str(tmp_path / "nd_verdicts"))
     rp = verdicts.filter(F.col("doc_id") >= 1_000_000)
@@ -94,7 +94,7 @@ def test_neardup_gate_rejects_reposts_across_batches_and_runs(
         neardup_gate(store, str(tmp_path / "nd_verdicts2")),
         query_name="nd_t2",
     )
-    q2.awaitTermination(240)
+    drain(q2, 240)
     v2 = spark.read.parquet(str(tmp_path / "nd_verdicts2"))
     assert v2.filter(F.col("verdict") != "dup_of_corpus").count() == 0
     assert store.read().count() == n_store  # no claim added or stolen
@@ -122,15 +122,7 @@ def test_neardup_gate_exactly_once_at_store_grain_across_kill(
         max_files_per_trigger=1,
         query_name="nk_kill",
     )
-    t0 = time.monotonic()
-    while time.monotonic() - t0 < 120:
-        if any(
-            p and p.get("numInputRows", 0) > 0 for p in (q1.recentProgress or [])
-        ):
-            break
-        time.sleep(0.1)
-    q1.stop()
-    q1.awaitTermination(60)
+    stop_after_first_progress(q1)
     q2 = start_store_gate_ingest(
         spark,
         str(inbox),
@@ -140,7 +132,7 @@ def test_neardup_gate_exactly_once_at_store_grain_across_kill(
         max_files_per_trigger=1,
         query_name="nk_resume",
     )
-    q2.awaitTermination(240)
+    drain(q2, 240)
 
     n_store = store.read().count()
     n_admitted = store_admitted(store).count()
@@ -157,7 +149,7 @@ def test_neardup_gate_exactly_once_at_store_grain_across_kill(
         neardup_gate(store, str(tmp_path / "nk_verdicts3")),
         query_name="nk_replay",
     )
-    q3.awaitTermination(240)
+    drain(q3, 240)
     v3 = spark.read.parquet(str(tmp_path / "nk_verdicts3"))
     assert v3.count() == docs.count()
     assert v3.filter(F.col("verdict") != "dup_of_corpus").count() == 0
@@ -206,7 +198,7 @@ def test_dual_neardup_gate_ram_absorbs_store_convicts(spark, sf_dir, tmp_path):
         max_files_per_trigger=1,
         query_name="dn_t1",
     )
-    q.awaitTermination(240)
+    drain(q, 240)
 
     verdicts = spark.read.parquet(str(tmp_path / "dn_verdicts"))
     # exact re-posts: absorbed upstream, never judged
@@ -239,7 +231,7 @@ def test_dual_neardup_gate_ram_absorbs_store_convicts(spark, sf_dir, tmp_path):
         watermark="10 minutes",
         query_name="dn_t2",
     )
-    q2.awaitTermination(240)
+    drain(q2, 240)
     v2 = spark.read.parquet(str(tmp_path / "dn_verdicts2"))
     assert v2.count() > 0
     assert v2.filter(F.col("verdict") != "dup_of_corpus").count() == 0

@@ -8,6 +8,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from conftest import drain
 from data_ingestion_task_spark.sources.tables import load_table, table_path
 from data_ingestion_task_spark.streaming.ingest import (
     ingest_transform,
@@ -28,7 +29,7 @@ def test_document_ingest_exactly_once(spark, sf_dir, tmp_path):
     q = start_document_ingest(
         spark, str(inbox), str(out), str(ckpt), schema, on_batch_summary=summaries.append
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     batch = ingest_transform(load_table(spark, sf_dir, "documents"))
     n1 = batch.count()
@@ -49,7 +50,7 @@ def test_document_ingest_exactly_once(spark, sf_dir, tmp_path):
     for i, f in enumerate((tmp_path / "extra").glob("*.parquet")):
         shutil.copy(f, inbox / f"batch2_{i}.parquet")
     q2 = start_document_ingest(spark, str(inbox), str(out), str(ckpt), schema)
-    q2.awaitTermination(120)
+    drain(q2, 120)
     assert spark.read.parquet(str(out)).count() == n1 + 7
 
 
@@ -63,7 +64,7 @@ def test_windowed_counts_match_batch_twin(spark, sf_dir, tmp_path):
     q = start_windowed_event_counts(
         spark, str(inbox), str(tmp_path / "ev_ckpt"), schema, query_name="win_counts"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     streamed = spark.table("win_counts")
     batch = (
@@ -116,7 +117,7 @@ def test_stateful_sessions_match_batch_twin(spark, sf_dir, tmp_path):
     q = start_stateful_sessions(
         spark, str(inbox), str(tmp_path / "sess_ckpt"), schema, query_name="sess_state"
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     # latest emission per user (largest n_events) = final running totals
     emitted = spark.table("sess_state")
@@ -136,7 +137,7 @@ def test_stateful_sessions_match_batch_twin(spark, sf_dir, tmp_path):
 
 
 def test_deduped_ingest_drops_redelivered_docs(spark, sf_dir, tmp_path):
-    from data_ingestion_task_spark.streaming.ingest import start_deduped_ingest
+    from data_ingestion_task_spark.streaming.dedup import start_dedup_ingest
 
     inbox = tmp_path / "dd_inbox"
     out = tmp_path / "dd_out"
@@ -145,8 +146,8 @@ def test_deduped_ingest_drops_redelivered_docs(spark, sf_dir, tmp_path):
     shutil.copy(table_path(sf_dir, "documents"), inbox / "batch1.parquet")
 
     schema = spark.read.parquet(str(inbox / "batch1.parquet")).schema
-    q = start_deduped_ingest(spark, str(inbox), str(out), str(ckpt), schema)
-    q.awaitTermination(120)
+    q = start_dedup_ingest(spark, str(inbox), str(out), str(ckpt), schema)
+    drain(q, 120)
     base = load_table(spark, sf_dir, "documents")
     n_unique = base.select("text").distinct().count()
     got = spark.read.parquet(str(out))
@@ -155,8 +156,8 @@ def test_deduped_ingest_drops_redelivered_docs(spark, sf_dir, tmp_path):
     # redeliver the SAME file under a new name (upstream retry): the
     # fingerprint state drops every row of it
     shutil.copy(table_path(sf_dir, "documents"), inbox / "batch1_redelivered.parquet")
-    q2 = start_deduped_ingest(spark, str(inbox), str(out), str(ckpt), schema)
-    q2.awaitTermination(120)
+    q2 = start_dedup_ingest(spark, str(inbox), str(out), str(ckpt), schema)
+    drain(q2, 120)
     assert spark.read.parquet(str(out)).count() == n_unique
 
 
@@ -164,7 +165,7 @@ def test_bounded_deduped_ingest_drops_dups_within_horizon(spark, sf_dir, tmp_pat
     """dropDuplicatesWithinWatermark path: duplicated deliveries of the
     same event_id inside the watermark horizon collapse to one row,
     with state bounded by the horizon instead of all-history."""
-    from data_ingestion_task_spark.streaming.ingest import start_bounded_deduped_ingest
+    from data_ingestion_task_spark.streaming.dedup import start_bounded_deduped_ingest
 
     inbox = tmp_path / "ev_inbox"
     events = (
@@ -184,7 +185,7 @@ def test_bounded_deduped_ingest_drops_dups_within_horizon(spark, sf_dir, tmp_pat
         schema,
         dedup_cols=["event_id"],
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     got = spark.read.parquet(str(tmp_path / "out"))
     assert got.count() == events.count()

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from conftest import drain
 from data_ingestion_task_spark.sources.upsert import (
     OLD_SUFFIX,
     KeyedParquetStore,
@@ -173,7 +174,7 @@ def test_streaming_foreach_batch_upsert(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     assert _rows(st.read()) == [(1, "a"), (2, "b")]
 
     # second file updates key 1; restart from the same checkpoint
@@ -187,7 +188,7 @@ def test_streaming_foreach_batch_upsert(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q2.awaitTermination(120)
+    drain(q2, 120)
     assert _rows(st.read()) == [(1, "A2"), (2, "b"), (3, "c")]
 
 
